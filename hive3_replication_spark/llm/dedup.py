@@ -12,7 +12,6 @@ a parameter below).
 
 from __future__ import annotations
 
-import os
 import threading
 
 from pyspark.sql import DataFrame, SparkSession
@@ -465,8 +464,7 @@ def _ngram_pair_jaccard_locked(
     n_shuf = int(
         sh_f.sparkSession.conf.get("spark.sql.shuffle.partitions", "200")
     )
-    if not os.environ.get("H3R_NO_PINPART"):  # A/B kill-switch
-        sh_f = sh_f.repartition(n_shuf, "shingle")
+    sh_f = sh_f.repartition(n_shuf, "shingle")
     postings = sh_f.groupBy("shingle").agg(
         F.sort_array(
             F.collect_list(F.struct("doc_id", "sz"))
@@ -980,8 +978,7 @@ def llm_dedup_minhash(
     # agg map side ran twice per invocation). localCheckpoint it — the
     # _batch_candidates idiom; n_docs × bands rows — so the sig agg and
     # the band explode run once (alternating A/B: −0.55 s at sf0.1).
-    if not os.environ.get("H3R_NO_BANDCK"):  # A/B kill-switch
-        banded = banded.localCheckpoint()
+    banded = banded.localCheckpoint()
     # component-match count via zip_with over the packed arrays — one
     # narrow expression instead of 32 column equalities (plan width, not
     # execution, was the measured cost of the column form)

@@ -1,45 +1,21 @@
 """Run registry: single-writer locking (SURVEY.md §1.1 "Lock / run registry").
 
-The reference guards concurrent runs with PID files + stale-PID detection
-(``misc_functions.sh:151-183``) and serializes bootstrap dumps with a
-``dump.lock`` (``beeline_functions.sh:92-101``). The engine uses atomic
-directory creation (mkdir is atomic on POSIX and on HDFS/S3A-with-guard)
-with the owner PID recorded for staleness checks — same semantics, no
-daemon.
-
-Takeover of a stale lock is itself atomic: the claimer RENAMES the stale
-lock dir aside (rename is atomic; exactly one concurrent claimer wins) and
-then re-acquires through the normal mkdir path, so two processes can never
-both conclude they took over. A lock dir whose pid file never appeared
-(holder crashed between mkdir and pid write) is treated as stale once it is
-older than a grace period.
-
-At scale this lock guards *driver-side orchestration only* (one replication
-run per database); executor parallelism inside a run needs no locks because
-snapshot dirs are immutable and the watermark advance is a single atomic
-rename (see incremental.py).
+The reference guards runs with PID files and stale-PID takeover
+(``misc_functions.sh:151-183``) plus ``beeline_functions.sh:92-101``'s
+dump.lock. The engine takes an exclusive ``flock`` on the ``<name>.lock``
+dir, which the kernel releases when the holder dies: a crashed run leaves
+no lock, so there is no staleness to judge. The ``pid`` file inside is
+informational only; it names the holder in the error and lets the holding
+process release through another object. Needs a local filesystem: on NFS
+``flock`` degrades to per-process POSIX locks, which threads would share.
 """
 
 from __future__ import annotations
 
+import contextlib
+import fcntl
 import os
-import shutil
-import threading
-import time
 from pathlib import Path
-
-#: A lock dir with no pid file older than this is considered stale (the
-#: mkdir→pid-write window of a live holder is milliseconds).
-_NO_PID_GRACE_S = 5.0
-
-#: Hard backstop for a takeover marker whose recorded claimer pid still
-#: reads alive: a takeover completes in milliseconds, so a marker this
-#: old belongs to a RECYCLED pid (or a foreign pid _pid_alive reports as
-#: alive via PermissionError) — without this bound one recycled pid
-#: would block every future takeover of a genuinely stale lock forever
-#: (round-9 review). Generous enough that no live stalled claimer (the
-#: ADVICE-r8 case the pid check exists for) plausibly spans it.
-_MARKER_MAX_AGE_S = 300.0
 
 
 class LockHeldError(RuntimeError):
@@ -51,6 +27,7 @@ class RunLock:
 
     def __init__(self, run_dir: str | os.PathLike, name: str) -> None:
         self.path = Path(run_dir) / f"{name}.lock"
+        self._fd: int | None = None
 
     def __enter__(self) -> "RunLock":
         self.acquire()
@@ -60,320 +37,44 @@ class RunLock:
         self.release()
 
     def acquire(self) -> None:
-        self.path.parent.mkdir(parents=True, exist_ok=True)
-        my_tokens: set[str] = set()
-        for _ in range(16):  # bounded retries through takeover races
+        while True:
+            with contextlib.suppress(FileExistsError):
+                self.path.mkdir(parents=True)
             try:
-                self.path.mkdir()
-            except FileExistsError:
-                owner = self._owner_pid()
-                if owner is not None and _pid_alive(owner):
-                    raise LockHeldError(
-                        f"{self.path} held by pid {owner} "
-                        "(beeline_functions.sh:92-101)"
-                    )
-                if owner is None and self._age_s() < _NO_PID_GRACE_S:
-                    # holder may be mid-acquire; not stale yet
-                    raise LockHeldError(
-                        f"{self.path} being acquired by another process"
-                    )
-                # stale (misc_functions.sh:168-180 stale-PID takeover).
-                # Rename-aside alone is NOT enough: between this claimer's
-                # staleness read and its rename, a competing claimer can
-                # complete the takeover and re-create a LIVE lock at this
-                # path, which the rename would then steal (double acquire —
-                # caught by the round-8 race test). So takeover itself is
-                # serialized through an adjacent mkdir-atomic marker, and
-                # staleness is RE-validated under that marker before the
-                # rename.
-                marker = self.path.with_name(f"{self.path.name}.takeover")
-                try:
-                    marker.mkdir()
-                except FileExistsError:
-                    # another claimer is mid-takeover. Staleness of the
-                    # MARKER mirrors the lock's own check (ADVICE r8): the
-                    # claimer records its pid inside, and the marker is
-                    # cleared only when that pid is DEAD — a pure age
-                    # threshold could rmtree a live claimer merely stalled
-                    # past the grace (NFS stall, SIGSTOP), re-opening the
-                    # narrow steal window the marker exists to close. The
-                    # age grace survives only for the pid-file-not-yet-
-                    # written sliver between mkdir and write_text.
-                    if self._marker_token(marker) in my_tokens:
-                        # OUR abandoned marker: a racing clearer displaced
-                        # it mid-takeover (we aborted on the token check)
-                        # and then restored it — nobody else will ever
-                        # clear a fresh live-pid marker, so without this
-                        # reclaim every claimer would burn its retries
-                        # against a ghost (round-10 race find: the
-                        # all-lost livelock). It is ours; reclaim and
-                        # retry — via the rename-aside-frozen idiom, not
-                        # a bare rmtree (ADVICE r10: between this token
-                        # read and the rmtree, a racing clearer can
-                        # displace the ghost and a THIRD claimer create
-                        # a fresh LIVE marker here, which the rmtree
-                        # would then delete).
-                        self._reclaim_own_marker(marker, my_tokens)
-                        continue
-                    claimer = self._marker_pid(marker)
-                    try:
-                        marker_age = time.time() - marker.stat().st_mtime
-                    except OSError:
-                        continue  # marker just vanished; retry from mkdir
-                    if self._marker_pid(marker) != claimer:
-                        # TOCTOU (ADVICE r9): the marker was cleared and
-                        # re-created by a NEW claimer between the pid read
-                        # and the stat — the dead old pid paired with the
-                        # fresh mtime would have mis-read a LIVE marker as
-                        # stale. The pid re-read detects the cross-process
-                        # swap; the FROZEN validation inside
-                        # _clear_marker_frozen is the authoritative guard
-                        # (it re-checks after an atomic rename, where no
-                        # further swap is possible).
-                        continue
-                    stale_marker = (
-                        claimer is None and marker_age > _NO_PID_GRACE_S
-                    ) or (
-                        claimer is not None
-                        and (
-                            not _pid_alive(claimer)
-                            or marker_age > _MARKER_MAX_AGE_S
-                        )
-                    )
-                    if stale_marker:
-                        self._clear_marker_frozen(marker)
-                    continue
-                # Ownership token: pid alone cannot distinguish two
-                # claimers in ONE process (threads share it), and the
-                # round-10 race harness turned exactly that blindness
-                # into a double acquire. First line stays the pid (the
-                # staleness checks parse it); the second line makes the
-                # token unique per claimer attempt.
-                token = (
-                    f"{os.getpid()}\n"
-                    f"{threading.get_ident()}:{time.monotonic_ns()}"
-                )
-                my_tokens.add(token)
-                try:
-                    (marker / "pid").write_text(token)
-                    owner = self._owner_pid()
-                    if owner is not None and _pid_alive(owner):
-                        raise LockHeldError(
-                            f"{self.path} held by pid {owner} "
-                            "(taken over while we raced)"
-                        )
-                    if owner is None and self._age_s() < _NO_PID_GRACE_S:
-                        raise LockHeldError(
-                            f"{self.path} being acquired by another process"
-                        )
-                    if self._marker_token(marker) != token:
-                        # a racing claimer's staleness pass displaced OUR
-                        # marker (and another may hold the path now):
-                        # takeover exclusivity is gone — abandon this
-                        # attempt and retry from mkdir. The conditional
-                        # finally below keeps us from deleting the new
-                        # claimer's marker on the way out.
-                        continue
-                    trash = self.path.with_name(
-                        f"{self.path.name}.stale-"
-                        f"{os.getpid()}-{time.monotonic_ns()}"
-                    )
-                    try:
-                        os.rename(self.path, trash)
-                    except OSError:
-                        continue  # dir released meanwhile; retry from mkdir
-                    # The rename FROZE the dir (nobody else touches the
-                    # trash path), so this identity check is race-free:
-                    # confirm we renamed the STALE lock we validated —
-                    # not a fresh lock that a faster claimer re-created
-                    # between our owner check and the rename (the round-10
-                    # race harness caught exactly that steal: validate-
-                    # then-rename is itself a TOCTOU; validate-AFTER-
-                    # rename is not).
-                    try:
-                        got: int | None = int((trash / "pid").read_text())
-                    except (OSError, ValueError):
-                        got = None
-                    if got != owner or (
-                        got is not None and _pid_alive(got)
-                    ):
-                        # mis-rename of a live/foreign lock: put it back
-                        # and retry from mkdir
-                        try:
-                            os.rename(trash, self.path)
-                        except OSError:
-                            # restore blocked (a third claimer occupied
-                            # the vacancy): leave the victim's dir intact
-                            # at the trash path for operator recovery and
-                            # surface the anomaly instead of deleting a
-                            # live lock
-                            raise LockHeldError(
-                                f"{self.path}: takeover collision — "
-                                f"displaced live lock preserved at {trash}"
-                            ) from None
-                        continue
-                    shutil.rmtree(trash, ignore_errors=True)
-                    # Complete the re-acquire NOW, still under the
-                    # marker's exclusivity: bouncing back through the
-                    # retry loop can exhaust the budget right after the
-                    # rename and leave the path VACANT with every
-                    # claimer reporting contention (round-10 race find —
-                    # the all-lost livelock). Only an uncontended
-                    # acquirer sneaking into the microsecond vacancy can
-                    # beat this mkdir; it then owns the lock legitimately
-                    # and we fall back to the loop and lose normally.
-                    try:
-                        self.path.mkdir()
-                    except FileExistsError:
-                        continue
-                    (self.path / "pid").write_text(str(os.getpid()))
-                    return
-                finally:
-                    # only tear down a marker that is still OURS (token,
-                    # not pid — thread-distinct): after a racing clear +
-                    # re-create, an unconditional rmtree here would
-                    # delete the new claimer's marker
-                    if self._marker_token(marker) == token:
-                        shutil.rmtree(marker, ignore_errors=True)
-                continue
-            (self.path / "pid").write_text(str(os.getpid()))
-            return
-        raise LockHeldError(f"{self.path}: takeover contention, giving up")
+                fd = os.open(self.path, os.O_RDONLY | os.O_DIRECTORY)
+            except FileNotFoundError:
+                continue  # released and removed between mkdir and open
+            try:
+                fcntl.flock(fd, fcntl.LOCK_EX | fcntl.LOCK_NB)
+                # a holder that released meanwhile removed the inode we
+                # locked, which excludes nobody who mkdirs the path afresh
+                if os.path.samestat(os.stat(self.path), os.fstat(fd)):
+                    self._fd = fd
+                    break
+            except FileNotFoundError:
+                pass
+            except BlockingIOError:
+                pid = self._owner_pid()
+                raise LockHeldError(f"{self.path} held by pid {pid}") from None
+            finally:
+                if self._fd != fd:
+                    os.close(fd)
+        (self.path / "pid").write_text(str(os.getpid()))
 
-    def release(self, force: bool = False) -> None:
-        """Remove only if owned (``beeline_functions.sh:112-114``)."""
-        if not self.path.exists():
+    def release(self) -> None:
+        """Remove only if owned (``beeline_functions.sh:112-114``); the dir
+        goes before the fd closes, so no waiter keeps a removed inode."""
+        if self._fd is None and self._owner_pid() != os.getpid():
             return
-        if not force and self._owner_pid() != os.getpid():
-            return
-        pid_file = self.path / "pid"
-        if pid_file.exists():
-            pid_file.unlink()
-        self.path.rmdir()
+        with contextlib.suppress(OSError):  # gone, or foreign files inside
+            (self.path / "pid").unlink(missing_ok=True)
+            self.path.rmdir()
+        if self._fd is not None:
+            os.close(self._fd)
+            self._fd = None
 
     def _owner_pid(self) -> int | None:
         try:
             return int((self.path / "pid").read_text())
         except (OSError, ValueError):
             return None
-
-    @staticmethod
-    def _marker_pid(marker: Path) -> int | None:
-        try:
-            return int((marker / "pid").read_text().split()[0])
-        except (OSError, ValueError, IndexError):
-            return None
-
-    @staticmethod
-    def _marker_token(marker: Path) -> str | None:
-        try:
-            return (marker / "pid").read_text()
-        except OSError:
-            return None
-
-    @staticmethod
-    def _reclaim_own_marker(marker: Path, my_tokens: set[str]) -> None:
-        """Remove OUR abandoned ghost marker WITHOUT a check-then-rmtree
-        race (ADVICE r10): atomically rename it aside (after the rename
-        nobody else can swap the dir), re-validate that the frozen copy's
-        token really is one of ours, and only then delete it. A frozen
-        copy that turns out to be another claimer's fresh marker (the
-        ghost was displaced and the path re-used between the caller's
-        token read and our rename) is renamed back; if ITS path was
-        re-occupied meanwhile, the copy is dropped — the displaced
-        claimer self-aborts via its token re-checks, so dropping the
-        copy cannot enable a second concurrent takeover (same restore
-        contract as ``_clear_marker_frozen``).
-
-        Residual interleaving (ADVICE r11, on record): if the foreign
-        claimer whose copy we drop had ALREADY passed its token re-check
-        before our rename, its next token read never happens — for that
-        interval TWO claimers (it and the re-occupier) believe they hold
-        marker exclusivity simultaneously. Correctness then rests on the
-        lock-dir takeover tail alone, and holds: ``os.rename`` of the
-        one lock path is atomic (exactly one of the two renames wins;
-        the loser retries), and the POST-rename frozen validation makes
-        the winner restore-and-retry if what it froze is live or not the
-        stale lock it validated. The marker is an optimization that
-        serializes takeovers; the rename+frozen-validate is the safety
-        floor — exercised directly by
-        tests/test_repl_pipeline.py::
-        test_reclaim_drop_interval_frozen_validation_floor."""
-        reclaim = marker.with_name(
-            f"{marker.name}.reclaim-{os.getpid()}-{time.monotonic_ns()}"
-        )
-        try:
-            os.rename(marker, reclaim)
-        except OSError:
-            return  # already displaced by a racing clearer; retry
-        if RunLock._marker_token(reclaim) in my_tokens:
-            shutil.rmtree(reclaim, ignore_errors=True)
-            return
-        try:
-            os.rename(reclaim, marker)
-        except OSError:
-            shutil.rmtree(reclaim, ignore_errors=True)
-
-    @staticmethod
-    def _clear_marker_frozen(marker: Path) -> None:
-        """Clear a stale takeover marker WITHOUT a check-then-rmtree race:
-        atomically rename it aside (exactly one concurrent clearer wins;
-        after the rename nobody else can swap the dir), re-validate
-        staleness on the frozen copy, and either delete it or rename it
-        back. A marker that turns out LIVE is restored; if its path was
-        re-occupied meanwhile, the displaced claimer self-aborts via its
-        token re-checks (pre-rename and teardown), so dropping the frozen
-        copy cannot enable a second concurrent takeover."""
-        pid_now = RunLock._marker_pid(marker)
-        if pid_now is None or _pid_alive(pid_now):
-            # last-instant freshness re-check, for LIVE/unwritten claimers
-            # only: a marker re-created since the caller's staleness read
-            # is not ours to displace — this cuts the spurious
-            # displace-restore of a live claimer to the stat→rename
-            # sliver (the displaced claimer's token reclaim path recovers
-            # even that). A DEAD claimer's marker must clear immediately
-            # whatever its age.
-            try:
-                if time.time() - marker.stat().st_mtime <= _NO_PID_GRACE_S:
-                    return
-            except OSError:
-                return
-        mtrash = marker.with_name(
-            f"{marker.name}.clear-{os.getpid()}-{time.monotonic_ns()}"
-        )
-        try:
-            os.rename(marker, mtrash)
-        except OSError:
-            return  # vanished or already claimed by another clearer
-        pid = RunLock._marker_pid(mtrash)
-        try:
-            age = time.time() - mtrash.stat().st_mtime
-        except OSError:
-            age = 0.0
-        stale = (pid is None and age > _NO_PID_GRACE_S) or (
-            pid is not None
-            and (not _pid_alive(pid) or age > _MARKER_MAX_AGE_S)
-        )
-        if stale:
-            shutil.rmtree(mtrash, ignore_errors=True)
-            return
-        try:
-            os.rename(mtrash, marker)
-        except OSError:
-            shutil.rmtree(mtrash, ignore_errors=True)
-
-    def _age_s(self) -> float:
-        try:
-            return time.time() - self.path.stat().st_mtime
-        except OSError:
-            return 0.0
-
-
-def _pid_alive(pid: int) -> bool:
-    try:
-        os.kill(pid, 0)
-        return True
-    except ProcessLookupError:
-        return False
-    except PermissionError:
-        return True

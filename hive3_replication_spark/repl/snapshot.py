@@ -240,11 +240,12 @@ def source_tables(cfg: ReplConfig) -> list[str]:
 
 def table_fingerprints(root: str) -> dict[str, tuple]:
     """Cheap content fingerprint per table payload: sorted (relative name,
-    size) pairs of its files. Parquet/ORC files are immutable once written,
-    so the (name, size) set changing ⇔ content changing — the same
-    assumption distcp ``-update`` makes (``HQL/replextload.hql:9-11``).
-    Single-file tables fingerprint by size alone (source ``t.parquet`` and
-    target ``t`` are the same bytes under different names by design)."""
+    size, mtime_ns) triples of its files — rsync's quick check, standing in
+    for distcp ``-update`` (``HQL/replextload.hql:9-11``). The mtime catches
+    a same-size in-place rewrite; ``_fs_copy`` preserves mtimes, so a copied
+    table keeps matching its source. Single-file tables carry an empty
+    relative name (source ``t.parquet`` and target ``t`` are the same bytes
+    under different names by design)."""
     out: dict[str, tuple] = {}
     rootp = Path(root)
     if not rootp.exists():
@@ -256,16 +257,16 @@ def table_fingerprints(root: str) -> dict[str, tuple]:
         # may be single files or spark-written directories)
         name = entry.name.removesuffix(".parquet")
         if entry.is_file():
-            fp: tuple = (("", entry.stat().st_size),)
+            files = [("", entry.stat())]
         else:
-            fp = tuple(
-                sorted(
-                    (str(f.relative_to(entry)), f.stat().st_size)
-                    for f in entry.rglob("*")
-                    if f.is_file() and not f.name.startswith((".", "_"))
-                )
+            files = sorted(
+                (str(f.relative_to(entry)), f.stat())
+                for f in entry.rglob("*")
+                if f.is_file() and not f.name.startswith((".", "_"))
             )
-        out[name] = fp
+        out[name] = tuple(
+            (rel, st.st_size, st.st_mtime_ns) for rel, st in files
+        )
     return out
 
 

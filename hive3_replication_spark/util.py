@@ -37,11 +37,7 @@ def scratch_dir(prefix: str) -> str:
     return d
 
 
-def fan_out(
-    df: DataFrame,
-    probe: DataFrame | None = None,
-    env_gate: str = "H3R_NO_FANOUT",
-) -> DataFrame:
+def fan_out(df: DataFrame, probe: DataFrame | None = None) -> DataFrame:
     """Round-robin repartition ``df`` to ``defaultParallelism`` when the
     (scan-rooted) ``probe`` relation yields fewer partitions than cores —
     the guard ``_shingles`` has always used, factored out (optimization
@@ -64,10 +60,6 @@ def fan_out(
     memo can never serve a stale count). The value holds a strong
     reference to the probe so a collected object's id() cannot alias.
     """
-    import os
-
-    if os.environ.get(env_gate):  # A/B kill-switch (profiling only)
-        return df
     probe = df if probe is None else probe
     sess = df.sparkSession
     par = sess.sparkContext.defaultParallelism

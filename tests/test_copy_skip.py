@@ -51,3 +51,32 @@ def test_sync_skips_unchanged_and_copies_modified(spark, tmp_path):
     )
     # and the next sync is again a no-op
     assert sync_static_tables(spark, cfg) == []
+
+    # a same-size in-place rewrite (different bytes, equal st_size) must
+    # re-copy too: uncompressed, statistics-free files whose n_name values
+    # only change case have identical sizes
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+
+    table = pq.read_table(str(src / "nation.parquet"))
+    opts = dict(compression="NONE", use_dictionary=False,
+                write_statistics=False)
+    shutil.rmtree(src / "nation.parquet")
+    pq.write_table(table, str(src / "nation.parquet"), **opts)
+    assert sync_static_tables(spark, cfg) == ["nation"]
+    size = (src / "nation.parquet").stat().st_size
+    lowered = table.set_column(
+        table.schema.get_field_index("n_name"),
+        "n_name",
+        pc.utf8_lower(table["n_name"]),
+    )
+    pq.write_table(lowered, str(src / "nation.parquet"), **opts)
+    assert (src / "nation.parquet").stat().st_size == size
+    assert sync_static_tables(spark, cfg) == ["nation"]
+    names = {
+        r.n_name
+        for r in spark.read.parquet(f"{cfg.target_root}/nation").collect()
+    }
+    assert names == set(lowered["n_name"].to_pylist())
+    assert names != set(table["n_name"].to_pylist())
+    assert sync_static_tables(spark, cfg) == []

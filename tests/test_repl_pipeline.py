@@ -452,239 +452,128 @@ def test_stale_lock_takeover_race_single_winner(tmp_path):
     assert not stale.path.exists()
 
 
-def test_takeover_marker_pid_staleness(tmp_path):
-    """ADVICE r8 + round-9 review: the takeover marker carries its
-    claimer's pid, and marker staleness mirrors the lock's own check —
-    a marker whose claimer is STILL ALIVE is kept through any realistic
-    stall (a takeover stalled past the 5 s grace keeps its exclusivity;
-    the old pure-age rule would have rmtree'd it and re-opened the
-    steal window) — but a pid-bearing marker older than the hard
-    backstop is cleared anyway, because at that age the 'alive' pid is
-    a RECYCLED one and honoring it would deadlock every future
-    takeover. A dead-claimer marker is cleared immediately."""
+def test_run_lock_freed_by_holder_sigkill(tmp_path):
+    """A holder killed with SIGKILL runs no cleanup, yet the kernel drops
+    its flock: the next acquire succeeds with no takeover step, while
+    the live holder is named by pid in the contention error."""
     import os
-    import time
+    import subprocess
+    import sys
 
-    from hive3_replication_spark.repl import registry as reg
-
-    stale = RunLock(tmp_path, "dump")
-    stale.path.mkdir(parents=True)
-    (stale.path / "pid").write_text("999999999")  # dead lock owner
-    marker = stale.path.with_name(f"{stale.path.name}.takeover")
-    marker.mkdir()
-    (marker / "pid").write_text(str(os.getpid()))  # live claimer (us)
-    stalled = time.time() - 60  # past the 5 s grace, inside the backstop
-    os.utime(marker, (stalled, stalled))
-    with pytest.raises(LockHeldError):
-        RunLock(tmp_path, "dump").acquire()
-    assert marker.exists(), "live-claimer marker cleared inside backstop"
-    # same live pid but older than the recycled-pid backstop: cleared,
-    # takeover completes
-    ancient = time.time() - reg._MARKER_MAX_AGE_S - 10
-    os.utime(marker, (ancient, ancient))
-    lock2 = RunLock(tmp_path, "dump")
-    lock2.acquire()
-    assert (stale.path / "pid").read_text() == str(os.getpid())
-    lock2.release()
-    assert not stale.path.exists()
-    # dead-claimer marker: cleared immediately regardless of age
-    stale.path.mkdir()
-    (stale.path / "pid").write_text("999999999")
-    marker.mkdir()
-    (marker / "pid").write_text("999999999")
-    recent = time.time() - 1
-    os.utime(marker, (recent, recent))
-    lock3 = RunLock(tmp_path, "dump")
-    lock3.acquire()
-    assert (stale.path / "pid").read_text() == str(os.getpid())
-    lock3.release()
-
-
-def test_marker_backstop_takeover_race_single_winner(tmp_path):
-    """Round-10 race target (VERDICT r9 ask #4): 8 claimers racing the
-    RECYCLED-PID BACKSTOP — a stale dead-pid lock guarded by a takeover
-    marker that is older than _MARKER_MAX_AGE_S yet carries a live pid
-    (the recycled-pid shape the backstop exists for). Exactly one
-    claimer may clear the ancient marker and complete the takeover; the
-    losers must see the winner's fresh marker/lock and raise, never
-    double-claim. 10 repetitions — this harness found real bugs three
-    rounds running."""
-    import os
-    import time
-
-    from hive3_replication_spark.repl import registry as reg
-
-    for rep in range(10):
-        base = tmp_path / f"rep{rep}"
-        base.mkdir()
-        stale = RunLock(base, "dump")
-        stale.path.mkdir(parents=True)
-        (stale.path / "pid").write_text("999999999")  # dead lock owner
-        marker = stale.path.with_name(f"{stale.path.name}.takeover")
-        marker.mkdir()
-        (marker / "pid").write_text(str(os.getpid()))  # "live" claimer
-        ancient = time.time() - reg._MARKER_MAX_AGE_S - 10
-        os.utime(marker, (ancient, ancient))
-
-        results = _race_acquire(base, 8)
-        assert results.count("won") == 1, (rep, results)
-        assert (stale.path / "pid").read_text() == str(os.getpid())
-        assert not marker.exists(), "winner must clear its own marker"
-        RunLock(base, "dump").release()
-        assert not stale.path.exists()
-
-
-def test_marker_pid_reread_detects_swap(tmp_path, monkeypatch):
-    """ADVICE r9 TOCTOU regression test: if the marker is replaced by a
-    NEW live claimer between the staleness pid read and the stat, the
-    pid re-read straddling the stat must detect the swap and retry —
-    the pre-fix code paired the dead old pid with the fresh mtime and
-    rmtree'd the LIVE claimer's marker. Simulated deterministically by
-    feeding the two reads different pids for one iteration."""
-    import os
-
-    from hive3_replication_spark.repl import registry as reg
-
-    stale = RunLock(tmp_path, "dump")
-    stale.path.mkdir(parents=True)
-    (stale.path / "pid").write_text("999999999")  # dead lock owner
-    marker = stale.path.with_name(f"{stale.path.name}.takeover")
-    marker.mkdir()
-    (marker / "pid").write_text(str(os.getpid()))  # live claimer, fresh
-
-    real = reg.RunLock._marker_pid
-    feed = iter([999999999])  # first read: the vanished old claimer
-
-    def swapped(m):
+    with subprocess.Popen(
+        [
+            sys.executable, "-c",
+            "import time\n"
+            "from hive3_replication_spark.repl.registry import RunLock\n"
+            f"RunLock({str(tmp_path)!r}, 'dump').acquire()\n"
+            "print('held', flush=True)\n"
+            "time.sleep(600)\n",
+        ],
+        stdout=subprocess.PIPE,
+        text=True,
+        cwd=str(Path(__file__).resolve().parents[1]),
+    ) as holder:
         try:
-            return next(feed)
-        except StopIteration:
-            return real(m)
-
-    monkeypatch.setattr(reg.RunLock, "_marker_pid", staticmethod(swapped))
-    with pytest.raises(LockHeldError):
-        RunLock(tmp_path, "dump").acquire()
-    assert marker.exists(), (
-        "pid/stat swap window rmtree'd a live claimer's marker"
-    )
+            assert holder.stdout.readline().strip() == "held"
+            with pytest.raises(LockHeldError, match=f"pid {holder.pid}"):
+                RunLock(tmp_path, "dump").acquire()
+        finally:
+            holder.kill()  # SIGKILL: the holder runs no cleanup
+    with RunLock(tmp_path, "dump") as lock:
+        assert (lock.path / "pid").read_text() == str(os.getpid())
+    assert not lock.path.exists()
 
 
-def test_reclaim_own_marker_frozen_validation(tmp_path, monkeypatch):
-    """ADVICE r10: the own-ghost-marker reclaim must rename-aside and
-    re-validate the frozen copy's token, never rmtree on a pre-read
-    token. Three branches: (a) the frozen copy IS ours — deleted;
-    (b) the frozen copy carries a FOREIGN token (the ghost was displaced
-    and the path re-used between the caller's read and the rename) —
-    restored intact; (c) foreign token AND the restore path re-occupied
-    — the copy is dropped, the occupier's marker survives."""
+def test_leftover_lock_naming_live_pid_does_not_block(tmp_path):
+    """A lock dir left behind whose pid file names a LIVE but unrelated
+    process (pid reuse) must not block: only a held flock excludes."""
     import os
 
-    from hive3_replication_spark.repl.registry import RunLock
-
-    marker = tmp_path / "dump.lock.takeover"
-
-    # (a) ours → reclaimed
-    marker.mkdir()
-    (marker / "pid").write_text("123\nghost-token")
-    RunLock._reclaim_own_marker(marker, {"123\nghost-token"})
-    assert not marker.exists()
-    assert not list(tmp_path.glob("*.reclaim-*")), "frozen copy leaked"
-
-    # (b) foreign → restored with its token intact
-    marker.mkdir()
-    (marker / "pid").write_text("456\nlive-claimer-token")
-    RunLock._reclaim_own_marker(marker, {"123\nghost-token"})
-    assert marker.exists()
-    assert (marker / "pid").read_text() == "456\nlive-claimer-token"
-    assert not list(tmp_path.glob("*.reclaim-*"))
-
-    # (c) foreign + restore blocked (path re-occupied while frozen):
-    # the copy is dropped, the occupier's marker is untouched
-    real_rename = os.rename
-    occupied = {"done": False}
-
-    def rename_and_occupy(src, dst):
-        real_rename(src, dst)
-        if not occupied["done"]:
-            occupied["done"] = True
-            marker.mkdir()  # a third claimer re-creates the marker
-            (marker / "pid").write_text("789\noccupier-token")
-
-    monkeypatch.setattr(os, "rename", rename_and_occupy)
-    RunLock._reclaim_own_marker(marker, {"123\nghost-token"})
-    monkeypatch.undo()
-    assert (marker / "pid").read_text() == "789\noccupier-token", (
-        "occupier's live marker must survive the blocked restore"
-    )
-    assert not list(tmp_path.glob("*.reclaim-*")), "frozen copy leaked"
-
-
-def test_marker_zero_backstop_race_single_winner(tmp_path, monkeypatch):
-    """Round-11 race target (VERDICT r10 ask #7): the takeover race at an
-    adversarial ZERO-second recycled-pid backstop — every claimer's fresh
-    marker reads as backstop-stale to every other claimer, so all of them
-    route through _clear_marker_frozen against each other's LIVE markers
-    every retry. The freshness re-check inside the frozen clear (live pid
-    + mtime within grace → restore untouched) is the only thing standing
-    between this configuration and a marker-steal double acquire; 10 reps
-    must elect exactly one winner each with no frozen-copy debris."""
-    import os
-
-    from hive3_replication_spark.repl import registry as reg
-
-    monkeypatch.setattr(reg, "_MARKER_MAX_AGE_S", 0.0)
-    for rep in range(10):
-        base = tmp_path / f"rep{rep}"
-        base.mkdir()
-        stale = RunLock(base, "dump")
-        stale.path.mkdir(parents=True)
-        (stale.path / "pid").write_text("999999999")  # dead lock owner
-
-        results = _race_acquire(base, 8)
-        assert results.count("won") == 1, (rep, results)
+    stale = RunLock(tmp_path, "dump")
+    stale.path.mkdir(parents=True)
+    (stale.path / "pid").write_text(str(os.getppid()))
+    with RunLock(tmp_path, "dump"):
         assert (stale.path / "pid").read_text() == str(os.getpid())
-        RunLock(base, "dump").release()
-        assert not stale.path.exists()
-        debris = [
-            p.name
-            for p in base.glob("*")
-            if ".reclaim-" in p.name or ".clear-" in p.name
-            or ".stale-" in p.name
-        ]
-        assert not debris, (rep, debris)
+    assert not stale.path.exists()
 
 
-def test_token_format_marker_backstop_race(tmp_path):
-    """Round-11 race target (VERDICT r10 ask #7, thread-token format):
-    the recycled-pid-backstop race seeded with a marker in the TWO-LINE
-    token format the round-10 code writes (pid + thread-token second
-    line) — the staleness parsers must read the pid off line one and the
-    clear/takeover paths must behave exactly as with a bare-pid marker.
-    10 reps, exactly one winner each."""
-    import os
+def test_run_lock_churn_never_two_holders(tmp_path):
+    """8 threads x 400 acquire/hold/release cycles: a waiter that locks
+    the inode a releasing holder just removed must notice and retry,
+    or it and the next mkdir-er would hold the lock at once."""
+    import sys
+    import threading
     import time
 
-    from hive3_replication_spark.repl import registry as reg
+    state = {"holders": 0, "max": 0, "wins": 0}
+    errors: list[Exception] = []
+    count_lock = threading.Lock()
+    barrier = threading.Barrier(8)
 
-    for rep in range(10):
-        base = tmp_path / f"rep{rep}"
-        base.mkdir()
-        stale = RunLock(base, "dump")
-        stale.path.mkdir(parents=True)
-        (stale.path / "pid").write_text("999999999")  # dead lock owner
-        marker = stale.path.with_name(f"{stale.path.name}.takeover")
-        marker.mkdir()
-        # live pid, token format, ancient — the recycled-pid shape
-        (marker / "pid").write_text(f"{os.getpid()}\n12345:67890")
-        ancient = time.time() - reg._MARKER_MAX_AGE_S - 10
-        os.utime(marker, (ancient, ancient))
+    def cycle() -> None:
+        try:
+            with RunLock(tmp_path, "dump"):
+                with count_lock:
+                    state["holders"] += 1
+                    state["wins"] += 1
+                    state["max"] = max(state["max"], state["holders"])
+                time.sleep(0.0005)
+                with count_lock:
+                    state["holders"] -= 1
+        except LockHeldError:
+            pass
 
-        results = _race_acquire(base, 8)
-        assert results.count("won") == 1, (rep, results)
-        assert (stale.path / "pid").read_text() == str(os.getpid())
-        assert not marker.exists(), "winner must clear its own marker"
-        RunLock(base, "dump").release()
-        assert not stale.path.exists()
+    def worker() -> None:
+        try:
+            barrier.wait(30)
+            for _ in range(400):
+                cycle()
+        except Exception as exc:  # noqa: BLE001
+            errors.append(exc)
+
+    threads = [threading.Thread(target=worker) for _ in range(8)]
+    switch = sys.getswitchinterval()
+    sys.setswitchinterval(1e-4)  # interleave threads between syscalls
+    try:
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(120)
+    finally:
+        sys.setswitchinterval(switch)
+    assert not any(t.is_alive() for t in threads)
+    assert not errors, errors
+    assert state["max"] == 1, state
+    assert state["wins"] > 0 and state["holders"] == 0, state
+    assert not RunLock(tmp_path, "dump").path.exists()
+
+
+def test_cli_exits_locked_when_instance_lock_held(tmp_path):
+    """The CLI's instance-lock exit (hive3repl.sh:67-70): while another
+    run holds the per-db lock, `python -m hive3_replication_spark` exits
+    2 with a JSON `locked` status instead of running."""
+    import json as _json
+    import subprocess
+    import sys
+
+    repl_root = tmp_path / "repl"
+    with RunLock(repl_root / "_locks", "instance_clidb"):
+        proc = subprocess.run(
+            [
+                sys.executable, "-m", "hive3_replication_spark", "clidb",
+                "--source-root", SF_DIR,
+                "--target-root", str(tmp_path / "target"),
+                "--repl-root", str(repl_root),
+            ],
+            capture_output=True,
+            text=True,
+            timeout=300,
+            cwd=str(Path(__file__).resolve().parents[1]),
+        )
+    assert proc.returncode == 2, proc.stdout[-2000:] + proc.stderr[-2000:]
+    report = _json.loads(proc.stdout.strip().splitlines()[-1])
+    assert report["db_name"] == "clidb" and report["status"] == "locked"
+    assert not (tmp_path / "target").exists()
 
 
 def test_local_path_uri_edge_cases():
@@ -771,118 +660,6 @@ def test_export_run_log_concurrent_writers_unique_valid(tmp_path, monkeypatch):
         body = _json.loads(open(p, encoding="utf-8").read())
         seen.add((body["writer"], body["rep"]))
     assert len(seen) == n_threads * n_reps
-
-
-def test_reclaim_drop_interval_frozen_validation_floor(tmp_path, monkeypatch):
-    """ADVICE r11: _reclaim_own_marker's blocked-restore branch drops a
-    foreign claimer's live marker copy; if that claimer had ALREADY
-    passed its token re-check, marker exclusivity is silently lost for
-    the interval and TWO claimers run the takeover tail concurrently.
-    This rep choreographs exactly that interval with event gates:
-
-      B: full acquire, past its token re-check, frozen just before its
-         lock rename;
-      R: the REAL _reclaim_own_marker — rename-aside lands, restore is
-         blocked by C's marker, B's copy is dropped (branch c);
-      C: full acquire through a fresh marker, wins the lock while B
-         still believes it holds exclusivity;
-      B released: renames C's LIVE lock — the post-rename frozen
-         validation MUST restore it and send B to a LockHeldError.
-
-    Confirms the lock-rename + frozen-validation floor alone prevents a
-    double acquire, with the victim lock intact."""
-    import os
-    import threading
-    import time as _time
-
-    from hive3_replication_spark.repl.registry import RunLock
-
-    base = tmp_path
-    stale = RunLock(base, "dump")
-    stale.path.mkdir(parents=True)
-    (stale.path / "pid").write_text("999999999")  # dead lock owner
-    lock_path = str(stale.path)
-    marker = stale.path.with_name(f"{stale.path.name}.takeover")
-
-    idents: dict[str, int] = {}
-    gates = {k: threading.Event() for k in (
-        "b_at_rename", "go_b", "aside_done", "c_marker_up", "go_c",
-    )}
-    real_rename = os.rename
-
-    def gated_rename(src, dst):
-        me = threading.get_ident()
-        if str(src) == lock_path and me == idents.get("b"):
-            gates["b_at_rename"].set()
-            assert gates["go_b"].wait(30)
-        elif str(src) == lock_path and me == idents.get("c"):
-            assert gates["go_c"].wait(30)
-        elif str(src) == str(marker) and me == idents.get("r"):
-            real_rename(src, dst)
-            gates["aside_done"].set()
-            assert gates["c_marker_up"].wait(30)
-            return
-        real_rename(src, dst)
-
-    monkeypatch.setattr(os, "rename", gated_rename)
-    results: dict[str, str] = {}
-
-    def claim(tag: str) -> None:
-        idents[tag] = threading.get_ident()
-        try:
-            RunLock(base, "dump").acquire()
-            results[tag] = "won"
-        except LockHeldError:
-            results[tag] = "lost"
-
-    t_b = threading.Thread(target=claim, args=("b",))
-    t_b.start()
-    assert gates["b_at_rename"].wait(30)  # B past its token re-check
-
-    def reclaim() -> None:
-        idents["r"] = threading.get_ident()
-        # ghost token ≠ B's live token ⇒ foreign-copy branch
-        RunLock._reclaim_own_marker(marker, {"000\nghost-token"})
-
-    t_r = threading.Thread(target=reclaim)
-    t_r.start()
-    assert gates["aside_done"].wait(30)  # B's marker frozen aside
-
-    t_c = threading.Thread(target=claim, args=("c",))
-    t_c.start()
-    for _ in range(300):  # C's fresh marker re-occupies the path
-        tok = RunLock._marker_token(marker)
-        if tok is not None and tok.splitlines()[0] == str(os.getpid()):
-            break
-        _time.sleep(0.01)
-    else:
-        raise AssertionError("C never created its marker")
-    gates["c_marker_up"].set()  # R's restore now blocked → drops B's copy
-    t_r.join(30)
-    assert not t_r.is_alive()
-    assert not list(base.glob("*.reclaim-*")), "B's frozen copy must drop"
-
-    gates["go_c"].set()  # C runs the takeover tail and wins
-    t_c.join(30)
-    assert not t_c.is_alive() and results["c"] == "won"
-    assert (stale.path / "pid").read_text() == str(os.getpid())
-
-    gates["go_b"].set()  # B now renames C's LIVE lock
-    t_b.join(30)
-    assert not t_b.is_alive()
-    # the frozen validation restored C's lock and B lost — no double
-    # acquire, no destroyed live lock
-    assert results["b"] == "lost"
-    assert (stale.path / "pid").read_text() == str(os.getpid())
-    monkeypatch.undo()
-    RunLock(base, "dump").release()
-    assert not stale.path.exists()
-    debris = [
-        p.name for p in base.glob("*")
-        if ".reclaim-" in p.name or ".stale-" in p.name
-    ]
-    assert not debris, debris
-
 
 def test_parity_resume_never_erases_failures():
     """Round-12 review: a resume whose mode didn't re-target a failed

@@ -3,8 +3,6 @@
 
 from __future__ import annotations
 
-import pytest
-
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
@@ -128,37 +126,6 @@ def test_streaming_stream_stream_join_matches_batch(spark, tmp_path):
     bpairs = set(map(tuple, batch[["purchase_id", "click_id"]].values))
     assert spairs == bpairs
     assert len(streamed) == len(batch)
-
-
-def test_streaming_tws_progress_matches_batch(spark, tmp_path):
-    """State API v2 (transformWithStateInPandas): final per-user state must
-    equal the one-pass batch aggregation. The v2 driver worker requires a
-    working protobuf install, which this container lacks — skip there."""
-    pytest.importorskip("google.protobuf.descriptor")
-    from hive3_replication_spark.streaming.stateful_v2 import (
-        run_tws_progress_stream,
-    )
-
-    streamed = run_tws_progress_stream(
-        spark, SF_DIR, str(tmp_path / "ckpt")
-    ).toPandas()
-    import duckdb
-
-    con = duckdb.connect()
-    oracle = con.sql(
-        f"""
-        SELECT user_id, COUNT(*) AS n_events,
-               COUNT(DISTINCT event_type) AS n_types,
-               CAST(SUM(CAST(FLOOR(value * 10000 + 0.5) AS BIGINT))
-                    AS BIGINT) AS sum_m
-        FROM read_parquet('{SF_DIR}/events.parquet') GROUP BY user_id
-        """
-    ).df()
-    a = streamed.sort_values("user_id").reset_index(drop=True)
-    b = oracle.sort_values("user_id").reset_index(drop=True)
-    assert a[["user_id", "n_events", "n_types", "sum_m"]].astype(str).equals(
-        b[["user_id", "n_events", "n_types", "sum_m"]].astype(str)
-    )
 
 
 def test_streaming_kill_and_resume(spark, tmp_path):
