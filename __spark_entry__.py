@@ -24,18 +24,10 @@ def entry(spark: SparkSession) -> DataFrame:
     per-database source watermark vs target watermark with the reference's
     equal/behind/ahead classification (A1 + J1 + F7 over the events stream).
 
-    Also kicks off the daemon-thread prewarm of the sf0.01 fixtures and
-    per-process fixed costs (layouts, Derby boot, pair memo) so the
-    driver's verify sweep — which runs right after this smoke check, at
-    sf0.01 — doesn't pay them inside its first slow keys. The thread is
-    fault-isolated (every step individually try/except'd) and gated by
-    SPARK_GRAFT_PREWARM — set it to 0 to keep entry() strictly
-    side-effect-free (e.g. when smoke-checking in a profiler).
+    Side-effect free: it builds one lazy plan over the sf0.001 fixtures
+    and starts no thread. Layouts and memoized relations are built by the
+    first query that needs them (``hive3_replication_spark.cache``).
     """
-    import os
-
-    if os.environ.get("SPARK_GRAFT_PREWARM", "1") != "0":
-        registry.prewarm(spark, "/root/testdata/sf0.01")
     return join_watermark_compare(spark, "/root/testdata/sf0.001")
 
 

@@ -462,7 +462,7 @@ def _scale_probe(spark, queries, sf_dir: str) -> dict:
         fn = queries[name]
         if tag == "x10_sec" and name in x10_overrides:
             fn = x10_overrides[name]
-        clear_caches(strategy_memo=False)
+        clear_caches()
         t0 = time.perf_counter()
         fn(spark, d).count()
         return time.perf_counter() - t0
@@ -496,7 +496,7 @@ def _scale_probe(spark, queries, sf_dir: str) -> dict:
             )
             times["outlier_retried"] = True
         out["keys"][name] = times
-    clear_caches(strategy_memo=False)
+    clear_caches()
     try:
         out["pairs"] = _ngram_pair_counts(spark, sf_dir, probe_dir)
     except Exception as exc:  # noqa: BLE001 — probe rows are additive
@@ -519,7 +519,7 @@ def _scale_probe(spark, queries, sf_dir: str) -> dict:
         out["sink_restate"] = _sink_restate_probe(spark, sf_dir, probe_dir)
     except Exception as exc:  # noqa: BLE001 — probe rows are additive
         print(f"sink restate probe failed: {exc}", file=sys.stderr)
-    clear_caches(strategy_memo=False)
+    clear_caches()
     try:
         out["e2e_x10"] = _bench_replication_min(spark, probe_dir)
     except Exception as exc:  # noqa: BLE001 — probe rows are additive
@@ -700,7 +700,7 @@ def main() -> None:
     timings: dict[str, float] = {}
     contention: dict[str, dict] = {}
     for _pass in range(N_PASSES):
-        clear_caches(strategy_memo=False)
+        clear_caches()
         fp = _fingerprint_begin(spark)
         for name in HEADLINE:
             t0 = time.perf_counter()
@@ -724,7 +724,7 @@ def main() -> None:
     # CPU on identical e2e work in a quiet-window A/B/C isolation
     # (scripts/diag_e2e_regression.py, round 12; the r11 committed +26%
     # e2e fingerprint was exactly this adjacency plus 0.5% steal).
-    clear_caches(strategy_memo=False)
+    clear_caches()
     spark.catalog.clearCache()
     gc.collect()
     time.sleep(3)

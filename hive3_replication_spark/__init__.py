@@ -12,6 +12,8 @@ Layout:
 
 - ``session``     SparkSession factory with scale-oriented defaults
 - ``catalog``     table loading / schema normalization (ns-timestamp parquet)
+- ``cache``       one fingerprint-keyed cache for derived layouts, plan
+                  choices and persisted relations
 - ``operators``   relational operator library (SURVEY.md §2.2-2.8, §2.10)
 - ``llm``         dedup / similarity / text-analysis / multimodal (§2.11)
 - ``repl``        the replication pipeline itself (§3): snapshot, incremental,

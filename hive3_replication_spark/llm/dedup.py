@@ -12,11 +12,10 @@ a parameter below).
 
 from __future__ import annotations
 
-import threading
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .. import cache
 from ..catalog import load_embeddings, load_table
 from ..util import expr_memo, fan_out
 
@@ -121,71 +120,16 @@ def _shingles(
     return with_toks.select("doc_id", F.explode(sh_array).alias("shingle"))
 
 
-#: Per-operator cache registry: each keyed persist replaces (and unpersists)
-#: the previous invocation's cache, so repeated driver/bench runs hold at
-#: most one cached relation per operator instead of leaking one per call.
-_CACHES: dict[str, DataFrame] = {}
-
-
-def _swap_cache(key: str, df: DataFrame) -> DataFrame:
-    prev = _CACHES.get(key)
-    if prev is not None:
-        prev.unpersist(blocking=False)
-    cached = df.persist()
-    _CACHES[key] = cached
-    return cached
-
-
-#: Memoized scored-pair relations: cache_key → ((token, max_bucket,
-#: min_jaccard), persisted DF). The token (the sf dir) scopes reuse to one
-#: corpus, and the blocking cap + policy threshold are part of the
-#: relation's identity; any parameter change swaps the cache. This is shared-subplan materialization:
-#: llm_dedup_ngram and llm_dedup_clusters consume the SAME pair relation,
-#: so within a session the expensive blocking join runs once, not per op.
-_PAIR_MEMO: dict[str, tuple[tuple[str, int, float], DataFrame]] = {}
-#: Guards memo lookup/store: the prewarm thread may build the pair relation
-#: concurrently with the first consuming operator.
-_PAIR_LOCK = threading.Lock()
-
-#: Signature-matrix memos (MinHash/SimHash), corpus-token-scoped like
-#: _PAIR_MEMO: n_docs × a-few-longs relations, tiny at any corpus scale,
-#: rebuilt whenever the corpus dir changes. Lets the prewarm thread pay the
-#: shingle→hash→groupBy cost before the sweep reaches the dedup keys.
-_SIG_MEMO: dict[str, tuple[str, DataFrame]] = {}
-
-
-def _memo_sig_locked(cache_key: str, token: str, build) -> DataFrame:
-    """``_memo_sig`` body for callers already holding ``_PAIR_LOCK``
-    (the lock is not re-entrant; memoized builders that consume OTHER
-    memoized relations — the shared shingle relation below — must use
-    this form)."""
-    hit = _SIG_MEMO.get(cache_key)
-    if hit is not None and hit[0] == token:
-        return hit[1]
-    df = build().persist()
-    prev = _SIG_MEMO.pop(cache_key, None)
-    if prev is not None:
-        prev[1].unpersist(blocking=False)
-    _SIG_MEMO[cache_key] = (token, df)
-    return df
-
-
-def _memo_sig(cache_key: str, token: str, build) -> DataFrame:
-    """Memoized persisted relation keyed by (cache_key, corpus token)."""
-    with _PAIR_LOCK:
-        return _memo_sig_locked(cache_key, token, build)
-
-
-def _corpus_shingles_locked(documents: DataFrame, token: str) -> DataFrame:
+def _corpus_shingles(documents: DataFrame, token: str) -> DataFrame:
     """THE per-corpus distinct 3-shingle relation (doc_id, sz, shingle),
-    memoized under ``_PAIR_LOCK`` — shared by the ngram scorer AND the
-    MinHash signature build (optimization round 15, guide §1.2): both
-    previously tokenized + shingled the corpus independently per bench
-    pass. Sharing is exact for MinHash because per-permutation minima
-    are duplicate-insensitive — min over the per-doc DISTINCT shingle
-    set equals min over the multiset — and the ngram scorer consumed
-    exactly this with_size relation already. One narrow corpus pass per
-    session feeds both; ``clear_caches`` drops it with the other memos.
+    persisted in ``cache`` — shared by the ngram scorer AND the MinHash
+    signature build (optimization round 15, guide §1.2): both previously
+    tokenized + shingled the corpus independently per bench pass.
+    Sharing is exact for MinHash because per-permutation minima are
+    duplicate-insensitive — min over the per-doc DISTINCT shingle set
+    equals min over the multiset — and the ngram scorer consumed exactly
+    this with_size relation already. One narrow corpus pass per session
+    feeds both; ``clear_caches`` drops it with the other relations.
 
     Storage note for the 100 TB deployment (same as the ngram scorer's
     long-standing note): the persist is a fixture-scale memo —
@@ -193,52 +137,20 @@ def _corpus_shingles_locked(documents: DataFrame, token: str) -> DataFrame:
     prefer recomputing the narrow tokenize+shingle map per consumer
     (pure CPU, no shuffle) and keep only the |near-dups|-sized scored
     pair memo across operators."""
-    return _memo_sig_locked(
+    return cache.relation(
         "shingles_ws", token, lambda: _shingles(documents, with_size=True)
     )
 
 
-def clear_caches(strategy_memo: bool = True) -> None:
+def clear_caches() -> None:
     """Unpersist and forget all memoized relations (shingle caches, minhash
-    signatures, scored-pair memos). Benchmarks call this between timing
-    passes so each pass measures real work; within a pass the cross-operator
-    memoization (ngram → clusters → pipeline) applies as in production.
-
-    Runs under ``_PAIR_LOCK``: every other writer of these dicts holds it
-    (the builders), and clearing concurrently with a prewarm-thread build
-    would otherwise mutate a dict mid-iteration or strand a just-persisted
-    relation outside the memo.
-
-    ``strategy_memo``: by default also drops the A26 auto-strategy memo
-    (ADVICE r9 — keyed on the sf_dir path, so a dataset REPLACED at the
-    same path would otherwise keep a stale strategy). bench.py passes
-    False: the strategy memo is a PLAN-choice cache, not a relation
-    cache, and clearing it per timing pass would re-charge the eager
-    probe scan to every agg_weighted_median measurement — the exact
-    per-pass contamination the round-9 memoization removed."""
-    if strategy_memo:
-        # generation-bumping clear: an A26 probe in flight across this
-        # call cannot re-install its (stale-dataset) result afterwards
-        # (ADVICE r10 — plain dict.clear left that interleaving open)
-        from ..operators.aggregates import _wm_strategy_clear
-
-        _wm_strategy_clear()
-    # the unigram-EM memo is a RELATION cache like the ones below, so it
-    # clears on every call (not just strategy_memo) — cold bench passes
-    # must re-run the corpus pass + EM rounds, not hit the memo
-    from .text import unigram_clear
-
-    unigram_clear()
-    with _PAIR_LOCK:
-        for df in _CACHES.values():
-            df.unpersist(blocking=False)
-        _CACHES.clear()
-        for _, df in _PAIR_MEMO.values():
-            df.unpersist(blocking=False)
-        _PAIR_MEMO.clear()
-        for _, df in _SIG_MEMO.values():
-            df.unpersist(blocking=False)
-        _SIG_MEMO.clear()
+    signatures, scored-pair memos, the unigram trainer state). Benchmarks
+    call this between timing passes so each pass measures real work;
+    within a pass the cross-operator memoization (ngram → clusters →
+    pipeline) applies as in production. Layouts and the A26 plan choice
+    stay cached: their keys carry the input tables' fingerprints, so a
+    dataset replaced at the same path misses them anyway."""
+    cache.clear()
 
 
 def _pair_expand(docs: F.Column) -> F.Column:
@@ -390,9 +302,9 @@ def ngram_pair_jaccard(
     cross-operator cache |near-dups|-sized instead of |candidates|-sized).
     Used by llm_dedup_ngram and the composed pipeline so the blocking/
     threshold logic cannot drift between them. Pass ``memo_token``
-    (the corpus dir) to persist + reuse the scored pairs across operators.
-    Plan construction + memo swap run under ``_PAIR_LOCK`` (the prewarm
-    thread builds the same relation concurrently with the sweep).
+    (the corpus dir) to persist + reuse the scored pairs across operators;
+    the memo is keyed on the corpus's documents fingerprint, so a corpus
+    rewritten in place re-scores.
 
     Storage note for the 100 TB deployment: the SHINGLE relation persist
     below is a test-scale optimization (it is referenced by the df count
@@ -402,37 +314,34 @@ def ngram_pair_jaccard(
     per consumer (pure CPU, no shuffle) or checkpointing to cheap object
     storage — the relation worth caching across OPERATORS is the scored
     pair memo, which is |candidate pairs|-sized."""
-    with _PAIR_LOCK:
-        return _ngram_pair_jaccard_locked(
-            documents, cache_key, max_bucket, memo_token, min_jaccard
-        )
-
-
-def _ngram_pair_jaccard_locked(
-    documents: DataFrame,
-    cache_key: str,
-    max_bucket: int,
-    memo_token: str | None,
-    min_jaccard: float,
-) -> DataFrame:
-    if memo_token is not None:
-        # memo validity = (corpus, blocking cap, policy threshold): a hit
-        # computed under different parameters must NOT be returned —
-        # min_jaccard/max_bucket are part of the relation's identity
-        hit = _PAIR_MEMO.get(cache_key)
-        if hit is not None and hit[0] == (memo_token, max_bucket, min_jaccard):
-            return hit[1]
     # Per-doc shingle counts (the Jaccard denominators) ride each exploded
     # row for free (with_size: size() of the per-doc array, fully narrow) —
     # this deletes the groupBy(doc_id) sizes aggregation AND both
     # |pairs|-sized post-scoring joins the previous formulation paid.
+    # Memo-bypassing callers (the bench pair-count probe) stage their
+    # shingles privately.
+    if memo_token is None:
+        sh = cache.persist(
+            f"shingles:{cache_key}", _shingles(documents, with_size=True)
+        )
+        return _ngram_pair_scores(sh, max_bucket, min_jaccard)
     # Memoized consumers share ONE corpus shingle relation with the
-    # MinHash signature build (optimization round 15); memo-bypassing
-    # callers (the bench pair-count probe) still stage privately.
-    if memo_token is not None:
-        sh = _corpus_shingles_locked(documents, memo_token)
-    else:
-        sh = _swap_cache(cache_key, _shingles(documents, with_size=True))
+    # MinHash signature build (optimization round 15). Memo validity =
+    # (corpus, blocking cap, policy threshold): a hit computed under
+    # different parameters must NOT be returned — min_jaccard/max_bucket
+    # are part of the relation's identity.
+    return cache.relation(
+        f"pairs:{cache_key}", memo_token,
+        lambda: _ngram_pair_scores(
+            _corpus_shingles(documents, memo_token), max_bucket, min_jaccard
+        ),
+        max_bucket, min_jaccard,
+    )
+
+
+def _ngram_pair_scores(
+    sh: DataFrame, max_bucket: int, min_jaccard: float
+) -> DataFrame:
     # Pair generation via grouped postings, not a self-join: one shuffle of
     # the (filtered) postings instead of two. The frequency pre-filter runs
     # FIRST (partial-agg exchange carries |vocab| rows) so a stop-shingle's
@@ -482,18 +391,11 @@ def _ngram_pair_jaccard_locked(
     jac = F.col("inter").cast("double") / (
         F.col("sz_a") + F.col("sz_b") - F.col("inter")
     ).cast("double")
-    scored = (
+    return (
         inter.withColumn("jaccard", jac)
         .filter(F.col("jaccard") >= min_jaccard)
         .select("doc_a", "doc_b", "sz_a", "sz_b", "inter", "jaccard")
     )
-    if memo_token is not None:
-        prev = _PAIR_MEMO.pop(cache_key, None)
-        if prev is not None:
-            prev[1].unpersist(blocking=False)
-        scored = scored.persist()
-        _PAIR_MEMO[cache_key] = ((memo_token, max_bucket, min_jaccard), scored)
-    return scored
 
 
 def llm_dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -864,9 +766,8 @@ def minhash_signatures(documents: DataFrame, token: str) -> DataFrame:
         # per-permutation minima are duplicate-insensitive, so the ngram
         # scorer's per-doc DISTINCT shingles yield the bit-identical
         # signature while the corpus is tokenized+shingled once per
-        # session instead of once per consumer (build() already runs
-        # under _PAIR_LOCK via _memo_sig).
-        sh = _corpus_shingles_locked(documents, token)
+        # session instead of once per consumer.
+        sh = _corpus_shingles(documents, token)
         # Base hash = first 8 hex chars of md5, mod Mersenne. md5 is a few
         # GB/s/core slower than xxhash64 but (a) the per-shingle cost is
         # string-overhead-dominated and (b) md5 is bit-identical in DuckDB
@@ -879,7 +780,7 @@ def minhash_signatures(documents: DataFrame, token: str) -> DataFrame:
         h = sh.select(
             "doc_id",
             expr_memo(
-                ("mh_base_hash",),
+                ("mh_base_hash", MINHASH_PERMS, MINHASH_BANDS),
                 lambda: F.explode(
                     F.array(
                         F.conv(
@@ -892,7 +793,7 @@ def minhash_signatures(documents: DataFrame, token: str) -> DataFrame:
         )
         # constant trees (module-constant coefficients), ~110 ms per build
         perm_cols = expr_memo(
-            ("mh_perm_cols",),
+            ("mh_perm_cols", MINHASH_PERMS, MINHASH_BANDS),
             lambda: [
                 F.min(
                     (F.col("h") * _PERM_A[k] + _PERM_B[k]) % _MERSENNE
@@ -906,7 +807,7 @@ def minhash_signatures(documents: DataFrame, token: str) -> DataFrame:
             .select(
                 "doc_id",
                 expr_memo(
-                    ("mh_sig_pack",),
+                    ("mh_sig_pack", MINHASH_PERMS, MINHASH_BANDS),
                     lambda: F.array(
                         *[F.col(f"mh{k}") for k in range(MINHASH_PERMS)]
                     ).alias("sig"),
@@ -914,7 +815,7 @@ def minhash_signatures(documents: DataFrame, token: str) -> DataFrame:
             )
         )
 
-    return _memo_sig("minhash_sig", token, build)
+    return cache.relation("minhash_sig", token, build)
 
 
 def llm_dedup_minhash(
@@ -949,7 +850,7 @@ def llm_dedup_minhash(
 
     # constant trees (module-constant coefficients), ~130 ms per build
     band_structs = expr_memo(
-        ("mh_band_structs",),
+        ("mh_band_structs", MINHASH_PERMS, MINHASH_BANDS),
         lambda: [
             F.struct(
                 F.lit(bidx).alias("band"),
@@ -983,7 +884,7 @@ def llm_dedup_minhash(
     # narrow expression instead of 32 column equalities (plan width, not
     # execution, was the measured cost of the column form)
     matches = expr_memo(
-        ("mh_matches",),
+        ("mh_matches", MINHASH_PERMS, MINHASH_BANDS),
         lambda: F.aggregate(
             F.zip_with(
                 "sig_a",
@@ -1061,7 +962,7 @@ def simhash_signatures(documents: DataFrame, token: str) -> DataFrame:
             ),
         )
 
-    return _memo_sig("simhash_sig", token, build)
+    return cache.relation("simhash_sig", token, build)
 
 
 def llm_dedup_simhash(
@@ -1526,7 +1427,7 @@ def _sem_vectors(documents: DataFrame) -> DataFrame:
     # constant trees — ~300 ms of py4j construction per build (expr_memo:
     # round-16 driver cut)
     counts = expr_memo(
-        ("sem_counts",),
+        ("sem_counts", SEM_DIMS),
         lambda: [
             F.sum(F.when(F.col("dim") == d, 1).otherwise(0))
             .cast("double")
@@ -1540,7 +1441,7 @@ def _sem_vectors(documents: DataFrame) -> DataFrame:
         .select(
             "doc_id",
             expr_memo(
-                ("sem_arr",),
+                ("sem_arr", SEM_DIMS),
                 lambda: F.array(
                     *[F.col(f"c{d}") for d in range(SEM_DIMS)]
                 ).alias("x"),

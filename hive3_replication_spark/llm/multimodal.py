@@ -21,7 +21,6 @@ pipeline produces and parses is a spec-conformant image file.
 from __future__ import annotations
 
 import struct
-import threading
 import zlib
 from collections.abc import Iterator
 
@@ -30,6 +29,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .. import cache
 from ..catalog import load_table
 from ..util import scratch_dir
 
@@ -226,61 +226,35 @@ def _doc_geometry(doc_id: int) -> tuple[str, int, int, int]:
     return (fmt, doc_id % 64 + 16, doc_id * 7 % 48 + 16, n_frames)
 
 
-_IMAGE_CACHE: dict[str, str] = {}
-_IMAGE_LOCK = threading.Lock()
-
-
-def _documents_fingerprint(sf_dir: str) -> str:
-    """Source fingerprint for the image-fixture cache key (ADVICE r5: a
-    path-only key silently reuses stale files when the documents table at
-    the same path is regenerated — e.g. a rebuilt scale-probe dir)."""
-    import hashlib
-    import os
-
-    root = os.path.join(sf_dir, "documents.parquet")
-    h = hashlib.sha256(os.path.realpath(root).encode())
-    paths = [root]
-    if os.path.isdir(root):
-        paths = [os.path.join(root, n) for n in sorted(os.listdir(root))]
-    for p in paths:
-        try:
-            st = os.stat(p)
-            # st_mtime_ns, not int(st_mtime): whole-second resolution let a
-            # same-size regeneration within one second reuse stale fixtures
-            h.update(f"{p}:{st.st_size}:{st.st_mtime_ns}".encode())
-        except OSError:  # non-local/remote sf_dir: fall back to path-only
-            pass
-    return h.hexdigest()[:16]
-
-
 def image_files_path(spark: SparkSession, sf_dir: str) -> str:
     """Materialize one REAL image file per document (format and dimensions
     from ``_doc_geometry``) — test scaffolding standing in for the
     object-store image corpus that already exists in production. Cached
-    per (process, sf_dir) like the other derived layouts (lock-guarded:
-    the prewarm thread may build it concurrently with the sweep); the
-    driver-side write is setup, not the measured operator."""
-    cache_key = f"{sf_dir}:{_documents_fingerprint(sf_dir)}"
-    with _IMAGE_LOCK:
-        if cache_key not in _IMAGE_CACHE:
-            out = scratch_dir(prefix="h3r_imgfiles_")
-            doc_ids = [
-                r["doc_id"]
-                for r in load_table(spark, sf_dir, "documents")
-                .select("doc_id")
-                .collect()
-            ]
-            for doc_id in doc_ids:
-                fmt, width, height, n_frames = _doc_geometry(doc_id)
-                if fmt == "gif":
-                    payload = encode_gif(width, height, n_frames)
-                else:
-                    enc = encode_png if fmt == "png" else encode_bmp
-                    payload = enc(width, height)
-                with open(f"{out}/doc_{doc_id:08d}.{fmt}", "wb") as fh:
-                    fh.write(payload)
-            _IMAGE_CACHE[cache_key] = out
-    return _IMAGE_CACHE[cache_key]
+    per documents payload like the other derived layouts
+    (``cache.layout``: a documents table regenerated at the same path
+    rebuilds the files); the driver-side write is setup, not the measured
+    operator."""
+
+    def build() -> str:
+        out = scratch_dir(prefix="h3r_imgfiles_")
+        doc_ids = [
+            r["doc_id"]
+            for r in load_table(spark, sf_dir, "documents")
+            .select("doc_id")
+            .collect()
+        ]
+        for doc_id in doc_ids:
+            fmt, width, height, n_frames = _doc_geometry(doc_id)
+            if fmt == "gif":
+                payload = encode_gif(width, height, n_frames)
+            else:
+                enc = encode_png if fmt == "png" else encode_bmp
+                payload = enc(width, height)
+            with open(f"{out}/doc_{doc_id:08d}.{fmt}", "wb") as fh:
+                fh.write(payload)
+        return out
+
+    return cache.layout("image_files", sf_dir, ("documents",), build)
 
 
 def llm_multimodal(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -9,11 +9,10 @@ cells before scoring so the exact scorer touches ~n/cells vectors.
 
 from __future__ import annotations
 
-import threading
-
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from .. import cache
 from ..catalog import embedding_dim, load_embeddings, load_table
 from ..util import expr_memo, fan_out, scratch_dir
 
@@ -199,31 +198,26 @@ def llm_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-#: Materialized IVF index layouts, cached per (process, sf_dir); the lock
-#: guards against the prewarm thread building the same layout concurrently.
-_INDEX_CACHE: dict[str, str] = {}
-_INDEX_LOCK = threading.Lock()
-
-
 def ann_index_path(spark: SparkSession, sf_dir: str) -> str:
     """Materialize the IVF index as a CELL-PARTITIONED parquet layout —
     the stored form of a vector index in a lakehouse: one directory per
     coarse cell, so a probe's cell predicate prunes at the partition
-    level and never opens the other cells' files. Cached per (process,
-    sf_dir) like the partitioned/bucketed layouts in sources.readers."""
-    with _INDEX_LOCK:
-        if sf_dir not in _INDEX_CACHE:
-            out = scratch_dir(prefix="h3r_ivf_") + "/embeddings_by_cell"
-            emb = load_embeddings(spark, sf_dir)
-            (
-                emb.withColumn("cell", F.col("label"))
-                .repartition("cell")  # one writer task per cell
-                .write.mode("overwrite")
-                .partitionBy("cell")
-                .parquet(out)
-            )
-            _INDEX_CACHE[sf_dir] = out
-    return _INDEX_CACHE[sf_dir]
+    level and never opens the other cells' files. Cached per embeddings
+    payload like the partitioned/bucketed layouts in sources.readers."""
+
+    def build() -> str:
+        out = scratch_dir(prefix="h3r_ivf_") + "/embeddings_by_cell"
+        emb = load_embeddings(spark, sf_dir)
+        (
+            emb.withColumn("cell", F.col("label"))
+            .repartition("cell")  # one writer task per cell
+            .write.mode("overwrite")
+            .partitionBy("cell")
+            .parquet(out)
+        )
+        return out
+
+    return cache.layout("ann_index", sf_dir, ("embeddings",), build)
 
 
 def llm_ann_index_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -367,7 +361,9 @@ def _band_sig(col_name: str, dim: int) -> F.Column:
             ),
         )
 
-    return expr_memo(("band_sig", col_name, dim), build)
+    return expr_memo(
+        ("band_sig", col_name, dim, _N_PLANES, _BAND_WIDTH, _PLANE_SEED), build
+    )
 
 
 def _band_sig_local(vec: list[float]) -> list[int]:
@@ -879,14 +875,14 @@ def _km_assign(pts: DataFrame, cent: DataFrame) -> DataFrame:
     (optimization round 16, guide §7.3 driver fixed costs)."""
     cents = cent.agg(
         expr_memo(
-            ("km_cents_agg",),
+            ("km_cents_agg", _KM_K, _KM_CQ),
             lambda: F.array_sort(
                 F.collect_list(F.struct("cluster", "c"))
             ).alias("_cents"),
         )
     )
     best = expr_memo(
-        ("km_best",),
+        ("km_best", _KM_K, _KM_CQ),
         lambda: F.array_min(
             F.transform(
                 F.col("_cents"),
@@ -937,16 +933,16 @@ def _km_recompute(assigned: DataFrame) -> DataFrame:
     )
     sums = comps.groupBy("cluster", "i").agg(
         expr_memo(
-            ("km_sq",),
+            ("km_sq", _KM_K, _KM_CQ),
             lambda: F.sum(
                 F.floor(F.col("v") * _KM_CQ + F.lit(0.5)).cast("bigint")
             ).alias("sq"),
         ),
-        expr_memo(("km_n",), lambda: F.count("*").alias("n")),
+        expr_memo(("km_n", _KM_K, _KM_CQ), lambda: F.count("*").alias("n")),
     )
     return sums.groupBy("cluster").agg(
         expr_memo(
-            ("km_regroup",),
+            ("km_regroup", _KM_K, _KM_CQ),
             lambda: F.transform(
                 F.array_sort(
                     F.collect_list(
@@ -1090,14 +1086,11 @@ def llm_serving_e2e(
     # candidate count) and Catalyst does not CSE the band-join + dedup
     # subtree — persist the (q_id, vec_id) relation (2 longs/row,
     # |candidates|-sized at any scale) so it computes once per invocation
-    # (optimization round 15, guide §2.4; registry-managed like the other
+    # (optimization round 15, guide §2.4; cache-managed like the other
     # keyed persists, so repeated invocations never leak cached relations)
-    from .dedup import _PAIR_LOCK, _swap_cache
-
-    with _PAIR_LOCK:
-        cand = _swap_cache(
-            "serving_cand", _batch_candidates(emb, dim, max_bucket)
-        )
+    cand = cache.persist(
+        "serving_cand", _batch_candidates(emb, dim, max_bucket)
+    )
     absmax = F.array_max(
         F.transform(F.col("embedding"), lambda x: F.abs(x.cast("double")))
     )

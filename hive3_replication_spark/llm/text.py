@@ -10,11 +10,10 @@ downstream counts are partial-aggregated before exchange.
 
 from __future__ import annotations
 
-import threading
-
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from .. import cache
 from ..catalog import load_table
 
 #: 31^k for k in 0..7 — polynomial weights for the rolling fingerprint.
@@ -1168,26 +1167,6 @@ _UNI_EM_ROUNDS = 2
 _UNI_TOP_K = 40
 
 
-#: Memoized trainer relations, single-slot keyed by corpus token (the
-#: _SIG_MEMO discipline from llm/dedup.py): a new sf_dir swaps the slot
-#: and unpersists the previous corpus's relations. Tuple layout:
-#: (sf_dir, per-round output, persisted parents, final model state,
-#: corpus word vocab) — the last two feed L76's apply path.
-_UNI_MEMO: dict[str, tuple[str, DataFrame, list, DataFrame, DataFrame]] = {}
-_UNI_LOCK = threading.Lock()
-
-
-def unigram_clear() -> None:
-    """Unpersist and forget the memoized unigram-EM relations — called
-    from llm.dedup.clear_caches so benchmark cold passes measure the
-    real corpus pass + EM rounds instead of a memo hit."""
-    with _UNI_LOCK:
-        prev = _UNI_MEMO.pop("unigram", None)
-        if prev is not None:
-            for df in prev[2]:
-                df.unpersist(blocking=False)
-
-
 def _unigram_em_round(words_capped: DataFrame, cur: DataFrame):
     """One hard-lattice EM round: expected piece counts under the
     current piece probabilities, over the ≤2-piece analysis lattice.
@@ -1304,9 +1283,9 @@ def llm_unigram_tokenizer(spark: SparkSession, sf_dir: str) -> DataFrame:
     grid, lattice, and EM aggregates are VOCAB-sized (Σ|w| rows over
     word TYPES); the seed prune is a TakeOrdered top-K, not a global
     sort; the per-round rank window runs over ≤ 256 rows. Memoized per
-    corpus with the llm/dedup.py single-slot swap-unpersist discipline
-    (vocab + model-state relations are n_docs-independent in width and
-    ≤ vocab-sized in rows — trivial executor memory at any scale)."""
+    corpus in one ``cache`` slot (vocab + model-state relations are
+    n_docs-independent in width and ≤ vocab-sized in rows — trivial
+    executor memory at any scale)."""
     return _unigram_train(spark, sf_dir)[0]
 
 
@@ -1318,11 +1297,21 @@ def _unigram_train(
     corpus word vocab). The vocab is PERSISTED and the ≤256-row model
     is a LITERAL LocalRelation, so the L76 apply path plans over
     cached/literal state — zero corpus re-scan and no EM-lineage
-    re-planning, plan-gated in tests/test_plans.py."""
-    with _UNI_LOCK:
-        hit = _UNI_MEMO.get("unigram")
-        if hit is not None and hit[0] == sf_dir:
-            return hit[1], hit[3], hit[4]
+    re-planning, plan-gated in tests/test_plans.py. One ``cache`` slot:
+    a new corpus (or the same one rewritten) unpersists the previous
+    corpus's relations, and ``clear_caches`` drops them."""
+    out, model, words, _ = cache.get(
+        "unigram",
+        (sf_dir, cache.inputs(sf_dir, "documents")),
+        lambda: _unigram_fit(spark, sf_dir),
+        lambda v: [df.unpersist(blocking=False) for df in v[3]],
+        persisted=True,
+    )
+    return out, model, words
+
+
+def _unigram_fit(spark: SparkSession, sf_dir: str) -> tuple:
+    """The trainer body: (output, model, vocab, persisted relations)."""
     documents = load_table(spark, sf_dir, "documents")
     words = (
         documents.select(
@@ -1397,13 +1386,7 @@ def _unigram_train(
     # A literal relation cuts the lineage for real; the model stays
     # ≤ _UNI_SEED_K rows at ANY corpus scale.
     model = spark.createDataFrame(cur.collect(), schema=cur.schema)
-    with _UNI_LOCK:
-        prev = _UNI_MEMO.pop("unigram", None)
-        if prev is not None:
-            for df in prev[2]:
-                df.unpersist(blocking=False)
-        _UNI_MEMO["unigram"] = (sf_dir, out, persisted, model, words)
-    return out, model, words
+    return out, model, words, persisted
 
 
 def llm_unigram_apply(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -36,6 +36,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from .. import cache
 from ..catalog import load_table
 
 #: Rank mass scale (micro-rank units) and damping in percent — integer
@@ -308,8 +309,8 @@ def _domain_graph(
     spark: SparkSession, sf_dir: str
 ) -> tuple[DataFrame, DataFrame]:
     """(doms, edges) for the domain-authority graph, memoized + persisted
-    per sf_dir through dedup's ``_memo_sig`` seam (cleared by
-    ``llm.dedup.clear_caches`` like every other corpus-keyed relation).
+    per corpus in ``cache`` (cleared by ``llm.dedup.clear_caches`` like
+    every other corpus-keyed relation).
     Without the persist, every DataFrame reuse across the two unrolled
     iterations re-expands the whole subtree — 27 corpus scans in the
     naive plan vs two here (one per cached relation).
@@ -322,8 +323,6 @@ def _domain_graph(
     map-side-combinable agg — the only corpus-sized shuffle; the
     single-row domain count rides a 1-row broadcast nested loop (the
     _bm25_score scalar-broadcast idiom)."""
-    from .dedup import _memo_sig
-
     def build_doms() -> DataFrame:
         # NULL provenance cannot be assigned a domain — dropped from the
         # graph in BOTH engines (without the filter Spark's concat_ws
@@ -349,7 +348,7 @@ def _domain_graph(
             "source",
         )
 
-    doms = _memo_sig("web_doms", sf_dir, build_doms)
+    doms = cache.relation("web_doms", sf_dir, build_doms)
 
     def build_edges() -> DataFrame:
         documents = load_table(spark, sf_dir, "documents")
@@ -372,7 +371,7 @@ def _domain_graph(
             F.count("*").alias("w")
         )
 
-    return doms, _memo_sig("web_edges", sf_dir, build_edges)
+    return doms, cache.relation("web_edges", sf_dir, build_edges)
 
 
 def llm_domain_authority(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -14,40 +14,15 @@ exactly what a 100 TB deployment needs for reproducible pipelines.
 
 from __future__ import annotations
 
-import threading
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .. import cache
 from ..catalog import load_table
 
 
 def _dec_sum(col: str) -> F.Column:
     return F.sum(F.col(col).cast("decimal(18,4)")).cast("double")
-
-
-#: Per-process memo of the A26 auto-strategy probe result per sf_dir —
-#: the probe is an eager scan and the fixture's cardinality is stable.
-#: Concurrency contract (ADVICE r9/r10): reads and installs run under
-#: ``_WM_STRATEGY_LOCK`` with a generation stamp — a probe that was in
-#: flight when ``llm.dedup.clear_caches()`` invalidated the memo sees
-#: the generation bump and does NOT install its (possibly stale-dataset)
-#: result, so clear-then-reinstall can no longer resurrect a stale plan
-#: choice. Racing first callers at most duplicate the cheap probe scan.
-#: The lock is never held across the probe itself (an eager Spark scan).
-_WM_STRATEGY_CACHE: dict[str, str] = {}
-_WM_STRATEGY_LOCK = threading.Lock()
-_WM_STRATEGY_GEN = 0
-
-
-def _wm_strategy_clear() -> None:
-    """Invalidate the A26 strategy memo (the ``clear_caches`` seam).
-    Bumps the generation under the lock so an in-flight probe started
-    against the replaced dataset cannot re-install its stale result."""
-    global _WM_STRATEGY_GEN
-    with _WM_STRATEGY_LOCK:
-        _WM_STRATEGY_GEN += 1
-        _WM_STRATEGY_CACHE.clear()
 
 
 def agg_max_watermark(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -966,30 +941,20 @@ def agg_weighted_median(spark: SparkSession, sf_dir: str) -> DataFrame:
     a one-scalar approx-distinct probe routes past the ~1M-distinct
     crossover (docs/SCALE.md) to the histogram form automatically; at
     fixture cardinalities it always resolves to the exact one-window
-    plan the gate test pins. The probe result is MEMOIZED per sf_dir
-    (the fixture's cardinality is stable within a process), so repeated
-    plan constructions — EXPLAIN calls, bench passes — pay the probe
-    scan once, not per build (round-9 review)."""
+    plan the gate test pins. The probe result is MEMOIZED per lineitem
+    payload (``cache``: a table rewritten in place re-probes), so
+    repeated plan constructions — EXPLAIN calls, bench passes — pay the
+    probe scan once, not per build (round-9 review)."""
     from .skew import weighted_median, weighted_median_strategy
 
     li = load_table(spark, sf_dir, "lineitem")
-    with _WM_STRATEGY_LOCK:
-        strategy = _WM_STRATEGY_CACHE.get(sf_dir)
-        gen = _WM_STRATEGY_GEN
-    if strategy is None:
-        # probe OUTSIDE the lock (eager scan), install under it only if
-        # no clear_caches() ran meanwhile — a probe racing an
-        # invalidation must not re-install a result read from the
-        # replaced dataset (ADVICE r10). Concurrent first callers at
-        # most duplicate the probe scan, then converge on one value.
-        probed = weighted_median_strategy(
+    strategy = cache.get(
+        ("wm_strategy", sf_dir),
+        cache.inputs(sf_dir, "lineitem"),
+        lambda: weighted_median_strategy(
             li, "l_returnflag", "l_extendedprice"
-        )
-        with _WM_STRATEGY_LOCK:
-            if _WM_STRATEGY_GEN == gen:
-                strategy = _WM_STRATEGY_CACHE.setdefault(sf_dir, probed)
-            else:
-                strategy = probed  # use fresh result; leave memo cleared
+        ),
+    )
     return weighted_median(
         li, "l_returnflag", "l_extendedprice", "l_quantity",
         strategy=strategy,

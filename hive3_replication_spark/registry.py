@@ -6,7 +6,6 @@ oracle. ``__spark_entry__.py`` is a thin re-export of this module.
 from __future__ import annotations
 
 import re
-import threading
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
@@ -205,101 +204,6 @@ def build_queries() -> dict[str, QueryFn]:
     for name in sorted(out):
         ordered[name] = out[name]
     return ordered
-
-
-#: Per-process prewarm guard.
-_PREWARMED: set[str] = set()
-_PREWARM_LOCK = threading.Lock()
-
-
-def prewarm(spark: SparkSession, sf_dir: str) -> None:
-    """Fire-and-forget background warm-up for the verify sweep: first
-    parquet reads (footer + codec init), the partitioned/bucketed layout
-    materializations, the embedded Derby boot, and the memoized ngram pair
-    relation — every per-process fixed cost the sweep would otherwise pay
-    inside its first slow key. Runs in a daemon thread (Spark schedules
-    concurrent jobs from multiple threads fine); every step is individually
-    fault-isolated because prewarm is an optimization, never a correctness
-    dependency."""
-    with _PREWARM_LOCK:
-        if sf_dir in _PREWARMED:
-            return
-        _PREWARMED.add(sf_dir)
-    t = threading.Thread(
-        target=_prewarm_body, args=(spark, sf_dir), daemon=True,
-        name="h3r-prewarm",
-    )
-    t.start()
-
-
-def _prewarm_body(spark: SparkSession, sf_dir: str) -> None:
-    import os
-
-    from .catalog import load_table
-
-    if not os.path.isdir(sf_dir):
-        return
-    for table in (
-        "region nation customer supplier part orders lineitem events "
-        "documents embeddings"
-    ).split():
-        try:
-            load_table(spark, sf_dir, table).limit(1).count()
-        except Exception:  # noqa: BLE001 — prewarm never fails the caller
-            pass
-    try:
-        _readers.partitioned_events_path(spark, sf_dir)
-    except Exception:  # noqa: BLE001
-        pass
-    try:
-        _readers.bucketed_tables(spark, sf_dir)
-    except Exception:  # noqa: BLE001
-        pass
-    try:  # Python DataSource runner spin-up (scan_pysource)
-        from .sources.readers import _register_synth_source
-
-        _register_synth_source(spark)
-        (
-            spark.read.format("h3r_synth")
-            .option("n", 8)
-            .option("partitions", 1)
-            .load()
-            .count()
-        )
-    except Exception:  # noqa: BLE001
-        pass
-    try:  # Derby JVM boot (jdbc keys)
-        probe = spark.createDataFrame([(1,)], "x int")
-        _readers.jdbc_write(probe, "prewarm", "probe")
-    except Exception:  # noqa: BLE001
-        pass
-    try:  # memoized ngram pair relation (ngram / clusters / pipeline)
-        docs = load_table(spark, sf_dir, "documents")
-        _dedup.ngram_pair_jaccard(
-            docs, "ngram_shingles", memo_token=sf_dir
-        ).count()
-    except Exception:  # noqa: BLE001
-        pass
-    try:  # MinHash / SimHash signature memos (the dedup keys' first shuffle)
-        docs = load_table(spark, sf_dir, "documents")
-        _dedup.minhash_signatures(docs, sf_dir).count()
-        _dedup.simhash_signatures(docs, sf_dir).count()
-    except Exception:  # noqa: BLE001
-        pass
-    try:  # cell-partitioned IVF index layout (llm_ann_index_probe)
-        _similarity.ann_index_path(spark, sf_dir)
-    except Exception:  # noqa: BLE001
-        pass
-    try:  # domain/edge graph memo (llm_domain_authority)
-        doms, edges = _web._domain_graph(spark, sf_dir)
-        doms.count()
-        edges.count()
-    except Exception:  # noqa: BLE001
-        pass
-    try:  # real-image fixture layout (llm_multimodal / _resize)
-        _multimodal.image_files_path(spark, sf_dir)
-    except Exception:  # noqa: BLE001
-        pass
 
 
 #: Matches the embeddings RELATION wherever oracle SQL references it —

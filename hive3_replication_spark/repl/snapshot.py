@@ -25,6 +25,7 @@ from pathlib import Path
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..cache import table_fingerprint
 from ..session import ensure_engine_confs
 from ..util import rows_df
 from .model import MANIFEST_SCHEMA, WATERMARK_SCHEMA, ReplConfig
@@ -238,36 +239,24 @@ def source_tables(cfg: ReplConfig) -> list[str]:
     return [t for t in present if t in managed or t == EVENTS_TABLE]
 
 
-def table_fingerprints(root: str) -> dict[str, tuple]:
-    """Cheap content fingerprint per table payload: sorted (relative name,
-    size, mtime_ns) triples of its files — rsync's quick check, standing in
-    for distcp ``-update`` (``HQL/replextload.hql:9-11``). The mtime catches
-    a same-size in-place rewrite; ``_fs_copy`` preserves mtimes, so a copied
-    table keeps matching its source. Single-file tables carry an empty
-    relative name (source ``t.parquet`` and target ``t`` are the same bytes
-    under different names by design)."""
-    out: dict[str, tuple] = {}
+def table_fingerprints(root: str) -> dict[str, tuple | None]:
+    """``table_fingerprint`` of every table payload under ``root``:
+    sorted (relative name, size, mtime_ns) triples of its files — rsync's
+    quick check, standing in for distcp ``-update``
+    (``HQL/replextload.hql:9-11``). ``_fs_copy`` preserves mtimes, so a
+    copied table keeps matching its source. Single-file tables carry an
+    empty relative name (source ``t.parquet`` and target ``t`` are the
+    same bytes under different names by design)."""
     rootp = Path(root)
     if not rootp.exists():
-        return out
-    for entry in sorted(rootp.iterdir()):
-        if entry.name.startswith((".", "_")):
-            continue
-        # table name = entry name minus the .parquet suffix (source tables
-        # may be single files or spark-written directories)
-        name = entry.name.removesuffix(".parquet")
-        if entry.is_file():
-            files = [("", entry.stat())]
-        else:
-            files = sorted(
-                (str(f.relative_to(entry)), f.stat())
-                for f in entry.rglob("*")
-                if f.is_file() and not f.name.startswith((".", "_"))
-            )
-        out[name] = tuple(
-            (rel, st.st_size, st.st_mtime_ns) for rel, st in files
-        )
-    return out
+        return {}
+    # table name = entry name minus the .parquet suffix (source tables
+    # may be single files or spark-written directories)
+    return {
+        entry.name.removesuffix(".parquet"): table_fingerprint(entry)
+        for entry in sorted(rootp.iterdir())
+        if not entry.name.startswith((".", "_"))
+    }
 
 
 def sync_static_tables(

@@ -28,13 +28,23 @@ def scratch_dir(prefix: str) -> str:
     """``tempfile.mkdtemp`` with registered end-of-process cleanup.
 
     All derived test-scaffold layouts (alt-format copies of the fixture
-    tables, partitioned/bucketed layouts, the persisted IVF index) are
-    cached per (process, sf_dir); without cleanup each bench/test run
-    leaked one copy per layout (ADVICE r4). Cleanup runs at exit, after
-    any Spark jobs that read the layout."""
+    tables, partitioned/bucketed layouts, the persisted IVF index) live
+    in scratch dirs; without cleanup each bench/test run leaked one copy
+    per layout (ADVICE r4). Cleanup runs at exit, after any Spark jobs
+    that read the layout, or earlier when ``cache`` replaces a layout."""
     d = tempfile.mkdtemp(prefix=prefix)
     _SCRATCH_DIRS.append(d)
     return d
+
+
+def remove_scratch(path: str) -> None:
+    """Remove the scratch dir that holds ``path`` now, not at exit (a
+    cached layout being replaced)."""
+    for d in _SCRATCH_DIRS:
+        if path == d or path.startswith(d + "/"):
+            _SCRATCH_DIRS.remove(d)
+            shutil.rmtree(d, ignore_errors=True)
+            return
 
 
 def fan_out(df: DataFrame, probe: DataFrame | None = None) -> DataFrame:
@@ -99,7 +109,9 @@ def expr_memo(key: tuple, build):
     construction once per process. METADATA only: nothing here touches
     rows, results, or runtime values — only trees built purely from
     module constants and fixed column names may be memoized (never a
-    tree embedding query-specific data such as a collected vector).
+    tree embedding query-specific data such as a collected vector). A key
+    names every module constant its tree reads (``("sem_counts",
+    SEM_DIMS)``), so changing one misses instead of serving the old tree.
 
     The tree holds py4j references into the driver JVM, which is
     per-process and outlives any individual SparkSession, so entries

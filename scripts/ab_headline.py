@@ -52,7 +52,7 @@ def main() -> None:
 
     timings: dict[str, float] = {}
     for _pass in range(args.passes):
-        clear_caches(strategy_memo=False)
+        clear_caches()
         for name in keys:
             t0 = time.perf_counter()
             queries[name](spark, args.sf).count()

@@ -58,17 +58,17 @@ def main() -> None:
 
     print("running 2 headline passes...", flush=True)
     for _p in range(2):
-        clear_caches(strategy_memo=False)
+        clear_caches()
         for name in HEADLINE:
             queries[name](spark, sf_dir).count()
 
     print("B: e2e immediately after headline (bench adjacency)", flush=True)
-    clear_caches(strategy_memo=False)  # what bench.py does before e2e
+    clear_caches()  # what bench.py does before e2e
     spark.catalog.clearCache()
     _fingerprinted_e2e(spark, sf_dir, "B")
 
     print("C: e2e after cleanup + settle", flush=True)
-    clear_caches(strategy_memo=False)
+    clear_caches()
     spark.catalog.clearCache()
     gc.collect()
     time.sleep(3)  # let async block removal / task teardown drain

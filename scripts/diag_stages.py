@@ -58,7 +58,7 @@ def main() -> None:
 
     report: dict = {}
     for k in keys:
-        clear_caches(strategy_memo=False)
+        clear_caches()
         jobs_before = {j["jobId"] for j in _get(api, "/jobs")}
         spark.sparkContext.setJobDescription(f"diag:{k}")
         t0 = time.perf_counter()

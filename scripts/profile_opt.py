@@ -82,7 +82,7 @@ def main() -> None:
         # timed action, bench methodology (fresh plan per pass, cold memos)
         best = float("inf")
         for _p in range(args.passes):
-            clear_caches(strategy_memo=False)
+            clear_caches()
             t0 = time.perf_counter()
             queries[name](spark, args.sf).count()
             best = min(best, time.perf_counter() - t0)
@@ -90,7 +90,7 @@ def main() -> None:
         if args.noop:
             best = float("inf")
             for _p in range(args.passes):
-                clear_caches(strategy_memo=False)
+                clear_caches()
                 t0 = time.perf_counter()
                 (
                     queries[name](spark, args.sf)

@@ -41,7 +41,7 @@ def main() -> None:
     m = importlib.util.module_from_spec(spec)
     spec.loader.exec_module(m)
     t_e = time.time()
-    m.entry(spark).collect()  # driver smoke check — also kicks off prewarm
+    m.entry(spark).collect()  # driver smoke check (side-effect free)
     t_entry = time.time() - t_e
     q, o = m.queries(), m.oracle_sql()
 

@@ -1,0 +1,174 @@
+"""The fingerprint-keyed cache (``hive3_replication_spark.cache``): a table
+rewritten in place re-derives every layout and relation built from it,
+``clear_caches`` releases every persist the memoized keys make, a replaced
+layout's scratch dir is removed, and ``entry()`` starts no thread. Also the
+``expr_memo`` key discipline: keys name the module constants their trees
+read, and a memoized aliased tree still resolves to fresh exprIds per plan.
+"""
+
+from __future__ import annotations
+
+import os
+import shutil
+import threading
+
+import pyarrow.parquet as pq
+import pytest
+
+from hive3_replication_spark import cache
+from hive3_replication_spark.llm.dedup import clear_caches
+from hive3_replication_spark.registry import build_queries
+from tests.conftest import SF_DIR
+
+QUERIES = build_queries()
+
+#: key → (the input table the probe rewrites, the layout site it reads)
+STALE_PROBES = {
+    "scan_partitioned": ("events", "partitioned_events"),
+    "scan_zorder": ("events", "zorder_events"),
+    "scan_binaryfile": ("documents", "binary_docs"),
+    "llm_ann_index_probe": ("embeddings", "ann_index"),
+    "llm_dedup_ngram": ("documents", None),
+    "llm_dedup_minhash": ("documents", None),
+}
+
+
+def _copy_fixture(dst) -> str:
+    """A writable copy of the fixture dir (the fixture files are read-only;
+    copyfile does not carry the mode over)."""
+    os.makedirs(dst)
+    for name in os.listdir(SF_DIR):
+        shutil.copyfile(f"{SF_DIR}/{name}", f"{dst}/{name}")
+    return str(dst)
+
+
+def _halve(sf: str, table: str) -> None:
+    """Rewrite one table in place with every other row, so every date,
+    type and cell keeps rows but fewer of them."""
+    path = f"{sf}/{table}.parquet"
+    t = pq.read_table(path)
+    pq.write_table(t.take(list(range(0, t.num_rows, 2))), path)
+
+
+def _rows(spark, key: str, sf: str) -> list:
+    return sorted(map(tuple, QUERIES[key](spark, sf).collect()), key=repr)
+
+
+@pytest.mark.parametrize("key", sorted(STALE_PROBES))
+def test_rewritten_input_is_not_served_stale(spark, tmp_path, key):
+    """Call the key, rewrite its input table in place at half its rows,
+    call it again: the answer must equal a cold cache's, not the old one."""
+    table, site = STALE_PROBES[key]
+    sf = _copy_fixture(tmp_path / "sf")
+    before = _rows(spark, key, sf)
+    _halve(sf, table)
+    after = _rows(spark, key, sf)
+    cache.clear()
+    if site is not None:
+        cache.drop((site, sf))
+    cold = _rows(spark, key, sf)
+    assert cold != before, "the rewrite must change this key's answer"
+    assert after == cold
+
+
+def _persisted_rdds(spark) -> int:
+    """Persisted RDDs, not counting localCheckpoint truncation points: the
+    plans cut their lineage with those, and Spark's ContextCleaner
+    releases them once the plan is garbage, not ``clear_caches``."""
+    rdds = spark.sparkContext._jsc.sc().getPersistentRDDs().values()
+    it = rdds.iterator()
+    n = 0
+    while it.hasNext():
+        n += not it.next().isLocallyCheckpointed()
+    return n
+
+
+def test_clear_caches_releases_every_persist(spark):
+    """The memoized keys persist relations through ``cache``;
+    ``clear_caches`` must unpersist all of them."""
+    clear_caches()
+    n0 = _persisted_rdds(spark)
+    for key in (
+        "llm_dedup_ngram",
+        "llm_dedup_minhash",
+        "llm_dedup_semantic",
+        "llm_serving_e2e",
+        "llm_unigram_tokenizer",
+    ):
+        QUERIES[key](spark, SF_DIR).write.format("noop").mode(
+            "overwrite"
+        ).save()
+    assert _persisted_rdds(spark) > n0
+    clear_caches()
+    assert _persisted_rdds(spark) == n0
+
+
+def test_replaced_layout_scratch_dir_is_removed(spark, tmp_path):
+    from hive3_replication_spark.sources.readers import binary_docs_path
+
+    sf = _copy_fixture(tmp_path / "sf")
+    old = binary_docs_path(spark, sf)
+    assert binary_docs_path(spark, sf) == old  # unchanged input: a hit
+    st = os.stat(f"{sf}/documents.parquet")
+    os.utime(f"{sf}/documents.parquet", ns=(st.st_atime_ns, st.st_mtime_ns + 1))
+    new = binary_docs_path(spark, sf)
+    assert new != old and os.path.isdir(new)
+    assert not os.path.exists(old)
+    cache.drop(("binary_docs", sf))
+    assert not os.path.exists(new)
+
+
+def test_entry_starts_no_thread(spark):
+    import __spark_entry__ as entry_module
+
+    before = {t.ident for t in threading.enumerate()}
+    entry_module.entry(spark)
+    started = [
+        t.name for t in threading.enumerate() if t.ident not in before
+    ]
+    assert "h3r-prewarm" not in started, started
+    assert not any(t.name == "h3r-prewarm" for t in threading.enumerate())
+
+
+def test_expr_memo_key_names_its_constants(spark, monkeypatch):
+    """A memoized tree built from a module constant must miss when the
+    constant changes (here SEM_DIMS, which sizes the semantic vectors)."""
+    from hive3_replication_spark.llm import dedup
+
+    docs = spark.read.parquet(f"{SF_DIR}/documents.parquet").limit(3)
+    width = dedup.SEM_DIMS
+    assert len(dedup._sem_vectors(docs).first()["x"]) == width
+    monkeypatch.setattr(dedup, "SEM_DIMS", 8)
+    assert len(dedup._sem_vectors(docs).first()["x"]) == 8
+
+
+def test_memoized_alias_resolves_to_fresh_expr_ids(spark):
+    """One memoized ``F.count("*").alias("n")`` used in two independently
+    built plans resolves to a distinct exprId in each: the Alias is
+    unresolved until analysis, which mints the id per plan."""
+    from hive3_replication_spark.llm.similarity import (
+        _KM_CQ,
+        _KM_K,
+        _km_recompute,
+    )
+    from hive3_replication_spark.util import expr_memo
+
+    def missed():
+        raise AssertionError("km_n is not memoized under this key")
+
+    _km_recompute(
+        spark.createDataFrame([(0, [1.0, 2.0])], "cluster int, x array<double>")
+    )
+    n = expr_memo(("km_n", _KM_K, _KM_CQ), missed)
+
+    def n_expr_id(df) -> int:
+        out = df._jdf.queryExecution().analyzed().output()
+        return next(
+            out.apply(i).exprId().id()
+            for i in range(out.size())
+            if out.apply(i).name() == "n"
+        )
+
+    one = spark.range(5).groupBy().agg(n)
+    two = spark.range(7).selectExpr("id % 2 AS g").groupBy("g").agg(n)
+    assert n_expr_id(one) != n_expr_id(two)

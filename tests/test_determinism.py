@@ -128,7 +128,7 @@ _MEMOIZED = {
     "llm_dedup_simhash",
     "llm_dedup_clusters",
     "llm_domain_authority",  # persisted domain/edge relations (web.py)
-    "llm_unigram_apply",  # persisted vocab/model state (text.py _UNI_MEMO)
+    "llm_unigram_apply",  # persisted vocab/model state (cache slot "unigram")
 }
 
 

@@ -1188,12 +1188,13 @@ def test_preference_pairs_invariants_and_twin(spark):
 def test_ann_index_build_race_single_layout(spark, monkeypatch):
     """round-9 race coverage (VERDICT ask #6): N simultaneous cold-cache
     callers of ann_index_path must build the cell-partitioned layout
-    EXACTLY once per cold start (the _INDEX_LOCK seam the prewarm thread
-    shares with probes), agree on the path, and leave the probe operator
+    EXACTLY once per cold start (the ``cache`` lock is held across the
+    build), agree on the path, and leave the probe operator
     returning its normal result. 10 repetitions — the round-8 takeover
     bug only failed ~1 in 3 runs."""
     import threading
 
+    from hive3_replication_spark import cache
     from hive3_replication_spark.llm import similarity as sim
 
     builds: list[str] = []
@@ -1206,8 +1207,7 @@ def test_ann_index_build_race_single_layout(spark, monkeypatch):
 
     monkeypatch.setattr(sim, "scratch_dir", counting_scratch)
     for _rep in range(10):
-        with sim._INDEX_LOCK:
-            sim._INDEX_CACHE.pop(SF_DIR, None)
+        cache.drop(("ann_index", SF_DIR))
         builds.clear()
         paths: list[str] = []
         errors: list[BaseException] = []

@@ -359,21 +359,23 @@ def test_hostile_text_payload_features(spark, tmp_path_factory):
 def test_documents_fingerprint_subsecond_regeneration(tmp_path):
     """ADVICE r7: whole-second mtime plus size let a documents table
     regenerated within the same second (same file sizes) reuse the stale
-    image-fixture dir. st_mtime_ns must distinguish the two writes."""
+    image-fixture dir. The documents fingerprint that keys the image
+    layout (``cache.inputs``) must distinguish the two writes by
+    st_mtime_ns."""
     import os
 
-    from hive3_replication_spark.llm.multimodal import _documents_fingerprint
+    from hive3_replication_spark.cache import inputs
 
     sf = str(tmp_path)
     pq = os.path.join(sf, "documents.parquet")
     with open(pq, "wb") as fh:
         fh.write(b"x" * 64)
     st = os.stat(pq)
-    fp1 = _documents_fingerprint(sf)
+    fp1 = inputs(sf, "documents")
     # same size, same whole second, different nanosecond timestamp —
     # exactly the sub-second regeneration the fingerprint must catch
     os.utime(pq, ns=(st.st_atime_ns, st.st_mtime_ns + 1))
-    fp2 = _documents_fingerprint(sf)
+    fp2 = inputs(sf, "documents")
     assert fp1 != fp2
     # unchanged file: fingerprint is stable
-    assert _documents_fingerprint(sf) == fp2
+    assert inputs(sf, "documents") == fp2

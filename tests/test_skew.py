@@ -324,6 +324,7 @@ def test_wm_strategy_cache_concurrent_first_callers(spark, monkeypatch):
     import threading
 
     import hive3_replication_spark.operators.aggregates as aggs
+    from hive3_replication_spark import cache
     from hive3_replication_spark.llm.dedup import clear_caches
     from tests.conftest import SF_DIR
 
@@ -341,8 +342,9 @@ def test_wm_strategy_cache_concurrent_first_callers(spark, monkeypatch):
 
     monkeypatch.setattr(skew, "weighted_median_strategy", counting)
 
+    slot = ("wm_strategy", SF_DIR)
     for rep in range(10):
-        aggs._WM_STRATEGY_CACHE.clear()
+        cache.drop(slot)
         probes.clear()
         errors: list[Exception] = []
         barrier = threading.Barrier(8)
@@ -360,9 +362,7 @@ def test_wm_strategy_cache_concurrent_first_callers(spark, monkeypatch):
         for t in threads:
             t.join()
         assert not errors, (rep, errors)
-        assert aggs._WM_STRATEGY_CACHE == {SF_DIR: "exact"}, (
-            rep, aggs._WM_STRATEGY_CACHE,
-        )
+        assert cache.peek(slot) == "exact", (rep, cache.peek(slot))
         assert 1 <= len(probes) <= 8 and set(probes) == {"exact"}, (
             rep, probes,
         )
@@ -371,8 +371,8 @@ def test_wm_strategy_cache_concurrent_first_callers(spark, monkeypatch):
         aggs.agg_weighted_median(spark, SF_DIR)
         assert len(probes) == n, "warm caller re-ran the probe"
 
-    # clear_caches vs concurrent builders: the memo is cleared through the
-    # same seam the dedup memos use; builders mid-flight just re-probe
+    # clear_caches vs concurrent builders: clearing the relation memos
+    # must never corrupt the table or strand a torn plan-choice entry
     stop = threading.Event()
     errors2: list[Exception] = []
 
@@ -393,76 +393,44 @@ def test_wm_strategy_cache_concurrent_first_callers(spark, monkeypatch):
     for t in workers:
         t.join()
     assert not errors2, errors2
-    assert set(aggs._WM_STRATEGY_CACHE.values()) <= {"exact"}
+    assert cache.peek(slot) in (None, "exact")
 
 
-def test_wm_strategy_generation_stamp_blocks_stale_install(spark, monkeypatch):
-    """Round-12 race target (VERDICT r11 ask #6): the GENERATION stamp on
-    the A26 memo lock — a probe that was in flight when clear_caches()
-    invalidated the memo must NOT install its (possibly stale-dataset)
-    result, while still returning a usable strategy to its caller; the
-    next cold caller must re-probe and install fresh. Deterministic gate:
-    the probe is frozen mid-flight, the invalidation lands, the probe is
-    released — then the same interleaving WITHOUT an invalidation must
-    install (the stamp may only block genuinely raced installs)."""
-    import threading
+def test_wm_strategy_reprobes_rewritten_lineitem(spark, tmp_path, monkeypatch):
+    """The A26 plan choice is keyed on the lineitem payload's fingerprint:
+    a warm caller does not probe again, but a lineitem rewritten in place
+    at the same path re-probes instead of reusing the old choice."""
+    import shutil
+
+    import pyarrow.parquet as pq
 
     import hive3_replication_spark.operators.aggregates as aggs
     import hive3_replication_spark.operators.skew as skew
+    from hive3_replication_spark import cache
     from tests.conftest import SF_DIR
 
+    probes = []
     real = skew.weighted_median_strategy
-    probing = threading.Event()
-    release = threading.Event()
-    gate_on = {"v": True}
 
-    def gated(df, key, value_col):
-        if gate_on["v"]:
-            probing.set()
-            assert release.wait(30)
-        return real(df, key, value_col)
+    def counting(df, key, value_col):
+        probes.append(real(df, key, value_col))
+        return probes[-1]
 
-    monkeypatch.setattr(skew, "weighted_median_strategy", gated)
-
-    for rep in range(5):
-        aggs._WM_STRATEGY_CACHE.clear()
-        probing.clear()
-        release.clear()
-        gate_on["v"] = True
-        errors: list[Exception] = []
-
-        def build() -> None:
-            try:
-                aggs.agg_weighted_median(spark, SF_DIR)
-            except Exception as exc:  # noqa: BLE001
-                errors.append(exc)
-
-        t = threading.Thread(target=build)
-        t.start()
-        assert probing.wait(30)         # probe is in flight
-        aggs._wm_strategy_clear()       # invalidation lands mid-probe
-        release.set()
-        t.join(30)
-        assert not t.is_alive() and not errors, (rep, errors)
-        # the raced probe must NOT have installed
-        assert aggs._WM_STRATEGY_CACHE == {}, (rep, aggs._WM_STRATEGY_CACHE)
-        # a fresh caller re-probes and installs (no gate this time)
-        gate_on["v"] = False
-        aggs.agg_weighted_median(spark, SF_DIR)
-        assert aggs._WM_STRATEGY_CACHE == {SF_DIR: "exact"}, rep
-
-    # control: the SAME gated interleaving without an invalidation must
-    # install — proving the stamp only blocks genuinely raced installs
-    aggs._WM_STRATEGY_CACHE.clear()
-    probing.clear()
-    release.clear()
-    gate_on["v"] = True
-    t = threading.Thread(
-        target=lambda: aggs.agg_weighted_median(spark, SF_DIR)
+    monkeypatch.setattr(skew, "weighted_median_strategy", counting)
+    sf = str(tmp_path)
+    path = f"{sf}/lineitem.parquet"
+    shutil.copyfile(f"{SF_DIR}/lineitem.parquet", path)
+    aggs.agg_weighted_median(spark, sf)
+    aggs.agg_weighted_median(spark, sf)
+    assert probes == ["exact"]
+    t = pq.read_table(path)
+    pq.write_table(t.slice(0, t.num_rows // 2), path)
+    got = aggs.agg_weighted_median(spark, sf).toPandas()
+    assert probes == ["exact", "exact"]
+    assert cache.peek(("wm_strategy", sf)) == "exact"
+    # the re-probed plan reads the rewritten rows
+    cache.drop(("wm_strategy", sf))
+    cold = aggs.agg_weighted_median(spark, sf).toPandas()
+    assert got.sort_values("l_returnflag").reset_index(drop=True).equals(
+        cold.sort_values("l_returnflag").reset_index(drop=True)
     )
-    t.start()
-    assert probing.wait(30)
-    release.set()                       # no clear between probe & install
-    t.join(30)
-    assert not t.is_alive()
-    assert aggs._WM_STRATEGY_CACHE == {SF_DIR: "exact"}
