@@ -10,9 +10,14 @@ the parquet scan.
 
 from __future__ import annotations
 
+import os
+from pathlib import Path
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
+from . import cache
 from .session import ensure_engine_confs
 
 #: Tables provided by the test fixtures (TESTDATA.md / FIXTURES.md).
@@ -36,30 +41,98 @@ _NANOS_TS_COLUMNS: dict[str, tuple[str, ...]] = {
     "events": ("ts",),
 }
 
-#: Inferred-schema memo: (table path, payload mtime_ns) → StructType.
-#: Schema INFERENCE (spark.read.parquet with no schema) launches a footer-
-#: read job per call — measured ~170 ms each, and operators load 2-7 tables
-#: per invocation, which made inference the single largest fixed cost of a
-#: bench pass (round-15 measurement). Supplying the memoized schema
-#: explicitly skips that job; the memo is METADATA only (never rows or
-#: results — every query still computes from the parquet inputs), and the
-#: mtime in the key invalidates it if a table payload is ever rewritten.
-#: Non-statable paths (remote URIs) skip the memo and infer as before.
-_SCHEMA_MEMO: dict[tuple[str, int], "object"] = {}
+def footer_schema(spark: SparkSession, path: str | Path) -> T.StructType | None:
+    """Spark schema of a parquet table read from one file footer,
+    driver-side, with no Spark job. Schema inference
+    (``spark.read.parquet`` with no schema) launches a footer-read job of
+    its own, ~40 ms of work CPU per call.
 
-#: Loaded-DataFrame memo: (session id, table path, payload mtime_ns) →
-#: (session, DataFrame). A DataFrame is an immutable LAZY PLAN — returning
-#: the same object for a repeated load is pure plan reuse (METADATA, like
-#: _SCHEMA_MEMO; no persist, no rows — every action still computes from
-#: the parquet inputs). Building the plan costs two eagerly-analyzed
-#: Dataset creations (~15-30 ms of JVM analysis); operators load 2-7
-#: tables per invocation and a bench pass makes a few hundred load_table
-#: calls, so this was the largest remaining per-call fixed cost after the
-#: round-15 schema memo. The value keeps a STRONG reference to the owning
-#: session so a collected session's id() can never alias a new session;
-#: the mtime key invalidates on payload rewrite exactly like the schema
-#: memo.
-_DF_MEMO: dict[tuple[int, str, int], tuple[SparkSession, DataFrame]] = {}
+    Like Spark's ``mergeSchema=false`` inference, it reads one footer:
+    the first data file of a flat directory, or the file itself. Reading
+    every footer to check uniformity cost more than the job it replaces
+    on a many-file table, and the events stream gains a file every
+    replication tick.
+
+    The conversion is a strict allowlist of types whose inference result
+    is unambiguous: ints, floats, strings, booleans, dates, binary,
+    µs-timestamps, and arrays of these. A tz-less µs timestamp maps to
+    TimestampNTZ when ``spark.sql.parquet.inferTimestampNTZ.enabled`` is
+    on (Spark 4's default) and to TimestampType otherwise, exactly as
+    inference does. Anything else — ns or INT96 timestamps, nested
+    structs, maps, dictionaries — and any directory with subdirectories
+    (partition columns) returns None, and the caller infers as before. So
+    does a path that cannot be listed locally (a remote URI)."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    try:
+        first = _first_data_file(Path(path))
+        if first is None:
+            return None
+        arrow = pq.read_schema(first)
+    except (OSError, pa.ArrowException):
+        return None
+    prims = {
+        pa.int8(): T.ByteType(), pa.int16(): T.ShortType(),
+        pa.int32(): T.IntegerType(), pa.int64(): T.LongType(),
+        pa.float32(): T.FloatType(), pa.float64(): T.DoubleType(),
+        pa.string(): T.StringType(), pa.large_string(): T.StringType(),
+        pa.bool_(): T.BooleanType(), pa.date32(): T.DateType(),
+        pa.binary(): T.BinaryType(), pa.large_binary(): T.BinaryType(),
+    }
+    ntz: list[bool] = []  # the conf, read once and only when needed
+
+    def conv(t):
+        if t in prims:
+            return prims[t]
+        if isinstance(t, pa.TimestampType) and t.unit == "us":
+            if t.tz is not None:
+                return T.TimestampType()
+            if not ntz:
+                ntz.append(spark.conf.get(
+                    "spark.sql.parquet.inferTimestampNTZ.enabled", "true"
+                ).lower() == "true")
+            return T.TimestampNTZType() if ntz[0] else T.TimestampType()
+        if isinstance(t, (pa.ListType, pa.LargeListType)):
+            inner = conv(t.value_type)
+            return T.ArrayType(inner, True) if inner is not None else None
+        return None
+
+    fields = []
+    for field in arrow:
+        st = conv(field.type)
+        if st is None:
+            return None
+        fields.append(T.StructField(field.name, st, True))
+    return T.StructType(fields)
+
+
+def _first_data_file(p: Path) -> Path | None:
+    """The file itself, or the first data file (by name) of a flat table
+    directory; None for an empty directory or one with subdirectories.
+    Hidden and metadata entries (``.``/``_`` prefixes) are skipped, as
+    Spark skips them."""
+    if not p.is_dir():
+        p.stat()  # OSError for a missing or remote path
+        return p
+    first = None
+    with os.scandir(p) as it:
+        for e in it:
+            if e.name.startswith((".", "_")):
+                continue
+            if e.is_dir():
+                return None
+            if first is None or e.name < first:
+                first = e.name
+    return None if first is None else p / first
+
+
+def read_parquet(spark: SparkSession, path: str | Path) -> DataFrame:
+    """``spark.read.parquet(path)`` with the schema from ``footer_schema``
+    where it maps, so the read launches no inference job."""
+    schema = footer_schema(spark, path)
+    reader = spark.read if schema is None else spark.read.schema(schema)
+    return reader.parquet(str(path))
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -69,45 +142,38 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     proper TimestampType and can rely on Catalyst pushing filters into the
     parquet scan (the ns->us conversion is a projection, so pruning of other
     columns still reaches the reader).
+
+    The plan is memoized per (session, path) and keyed on the payload's
+    ``cache.table_fingerprint``. A DataFrame is an immutable LAZY PLAN, so
+    returning the same object for a repeated load is plan reuse, not a
+    result cache: every action still computes from the parquet inputs.
+    Building the plan costs ~15-30 ms of JVM analysis, and a bench pass
+    makes a few hundred loads. A file rewritten in place inside a table
+    directory changes the fingerprint, so it misses. The value holds the
+    session, so a collected session's id() cannot alias a new one. An
+    unstatable path (a remote URI) is not memoized.
     """
-    import os
-
-    from pyspark.sql.types import LongType
-
     ensure_engine_confs(spark)
     path = f"{sf_dir}/{name}.parquet"
-    key = None
-    try:
-        key = (path, os.stat(path).st_mtime_ns)
-    except OSError:  # remote URI / unstatable — plain inference path
-        pass
-    if key is not None:
-        hit = _DF_MEMO.get((id(spark), *key))
-        if hit is not None:
-            return hit[1]
-    schema = _SCHEMA_MEMO.get(key) if key is not None else None
-    if schema is not None:
-        df = spark.read.schema(schema).parquet(path)
-    else:
-        df = spark.read.parquet(path)
-        schema = df.schema
-        if key is not None:
-            # drop stale entries for the same path before inserting
-            for k in [k for k in _SCHEMA_MEMO if k[0] == path]:
-                del _SCHEMA_MEMO[k]
-            _SCHEMA_MEMO[key] = schema
+    fp = cache.table_fingerprint(path)
+    if fp is None:
+        return _load(spark, path, name)
+    return cache.get(
+        ("catalog.load_table", id(spark), path), fp,
+        lambda: (spark, _load(spark, path, name)),
+    )[1]
+
+
+def _load(spark: SparkSession, path: str, name: str) -> DataFrame:
+    df = read_parquet(spark, path)
     for col in _NANOS_TS_COLUMNS.get(name, ()):
-        field = next((f for f in schema.fields if f.name == col), None)
-        if field is not None and isinstance(field.dataType, LongType):
+        field = next((f for f in df.schema.fields if f.name == col), None)
+        if field is not None and isinstance(field.dataType, T.LongType):
             # integer DIV, not `/`: ns-since-epoch (~1.7e18) exceeds double's
             # 2^53 integer range, so float division would round the microsecond
             df = df.withColumn(
                 col, F.timestamp_micros(F.expr(f"`{col}` DIV 1000"))
             )
-    if key is not None:
-        for k in [k for k in _DF_MEMO if k[0] == id(spark) and k[1] == path]:
-            del _DF_MEMO[k]
-        _DF_MEMO[(id(spark), *key)] = (spark, df)
     return df
 
 
@@ -128,40 +194,23 @@ EMB_CLEAN_SUBQUERY = (
 )
 
 
-#: Embedding dimensionality memo, keyed like _SCHEMA_MEMO on (table path,
-#: payload mtime_ns). The vector width is STRUCTURAL metadata the parquet
-#: type system simply cannot carry for list columns (a fixed-width vector
-#: space's dim is schema-level information); probing it cost one Spark job
-#: (~120 ms) per operator call, three headline operators deep (round-15
-#: measurement). Rows never enter this memo and a rewritten payload
-#: re-probes via the mtime key.
-_DIM_MEMO: dict[tuple[str, int], int] = {}
-
-
 def embedding_dim(spark: SparkSession, sf_dir: str) -> int:
     """Dimensionality of the embeddings relation (length of the first
-    clean vector), memoized per (path, payload mtime). Consumers build
-    per-dimension expression lists from this, so it must be a driver-side
-    int; the memo makes it one probe job per dataset per process instead
-    of one per operator invocation."""
-    import os
-
+    clean vector). Consumers build per-dimension expression lists from
+    this, so it must be a driver-side int. The vector width is structural
+    metadata that parquet cannot carry for list columns, and probing it
+    is one Spark job (~120 ms), so it is memoized per path and keyed on
+    the payload's ``cache.table_fingerprint``: one probe per dataset per
+    process, and a rewritten payload re-probes."""
     path = f"{sf_dir}/embeddings.parquet"
-    key = None
-    try:
-        key = (path, os.stat(path).st_mtime_ns)
-    except OSError:
-        pass
-    if key is not None:
-        hit = _DIM_MEMO.get(key)
-        if hit is not None:
-            return hit
-    dim = len(load_embeddings(spark, sf_dir).select("embedding").first()[0])
-    if key is not None:
-        for k in [k for k in _DIM_MEMO if k[0] == path]:
-            del _DIM_MEMO[k]
-        _DIM_MEMO[key] = dim
-    return dim
+
+    def probe() -> int:
+        return len(load_embeddings(spark, sf_dir).select("embedding").first()[0])
+
+    fp = cache.table_fingerprint(path)
+    if fp is None:
+        return probe()
+    return cache.get(("catalog.embedding_dim", path), fp, probe)
 
 
 def load_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -179,32 +228,26 @@ def load_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
     of the relation (kmeans re-evaluates this subtree per unrolled
     iteration); identical in the SQL twin ``EMB_CLEAN_SUBQUERY``.
 
-    The cleaned plan is memoized like ``load_table``'s (_DF_MEMO — lazy
-    plan-object reuse, metadata only): eight vector operators re-derived
-    the identical filter per invocation."""
-    import os
-
+    The cleaned plan is memoized like ``load_table``'s (lazy plan-object
+    reuse, metadata only): eight vector operators re-derived the identical
+    filter per invocation."""
     path = f"{sf_dir}/embeddings.parquet"
-    key = None
-    try:
-        key = (id(spark), f"{path}#clean", os.stat(path).st_mtime_ns)
-    except OSError:
-        pass
-    if key is not None:
-        hit = _DF_MEMO.get(key)
-        if hit is not None:
-            return hit[1]
-    zero = F.lit(0.0).cast("float")
-    df = load_table(spark, sf_dir, "embeddings").where(
-        F.col("embedding").isNotNull()
-        & (F.size("embedding") > 0)
-        & (
-            (F.array_max("embedding") != zero)
-            | (F.array_min("embedding") != zero)
+
+    def build() -> DataFrame:
+        zero = F.lit(0.0).cast("float")
+        return load_table(spark, sf_dir, "embeddings").where(
+            F.col("embedding").isNotNull()
+            & (F.size("embedding") > 0)
+            & (
+                (F.array_max("embedding") != zero)
+                | (F.array_min("embedding") != zero)
+            )
         )
-    )
-    if key is not None:
-        for k in [k for k in _DF_MEMO if k[0] == key[0] and k[1] == key[1]]:
-            del _DF_MEMO[k]
-        _DF_MEMO[key] = (spark, df)
-    return df
+
+    fp = cache.table_fingerprint(path)
+    if fp is None:
+        return build()
+    return cache.get(
+        ("catalog.load_embeddings", id(spark), path), fp,
+        lambda: (spark, build()),
+    )[1]

@@ -27,17 +27,33 @@ from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
-from ..catalog import load_table
+from ..catalog import load_table, read_parquet
 from ..session import ensure_engine_confs
-from ..util import rows_df
 from .model import MANIFEST_SCHEMA, ReplConfig
-from .snapshot import EVENTS_TABLE, MANIFEST_FILE, advance_watermark
+from .snapshot import (
+    EVENTS_TABLE,
+    MANIFEST_FILE,
+    advance_watermark,
+    parquet_int64_max,
+    parquet_row_count,
+    read_manifest_row,
+    write_control_row,
+)
 
 #: Event types that delete the key's state on replay (DDL DROP analog).
 DELETE_TYPES = ("error",)
 
 STATE_TABLE = "user_state"
+
+#: The state versions' schema. The engine writes every version itself,
+#: so reads take it from here instead of inferring it.
+STATE_SCHEMA = T.StructType([
+    T.StructField("user_id", T.LongType(), True),
+    T.StructField("last_event_id", T.LongType(), True),
+    T.StructField("state_value", T.DoubleType(), True),
+])
 
 
 def incremental_dump(
@@ -55,8 +71,6 @@ def incremental_dump(
     # optimization round 15): the global max IS the delta max whenever it
     # exceeds from_txid, and a global max at-or-below from_txid means an
     # empty delta. Payloads without stats fall back to the Spark job.
-    from .snapshot import parquet_int64_max
-
     dump_txid: int | None = None
     try:
         dump_txid = parquet_int64_max(
@@ -81,16 +95,10 @@ def incremental_dump(
         f"{dump_path}/{EVENTS_TABLE}"
     )
     now = dt.datetime.now(dt.timezone.utc).replace(tzinfo=None)
-    manifest = rows_df(
-        spark,
-        MANIFEST_SCHEMA,
-        [(cfg.db_name, dump_path, int(dump_txid), False, now)],
+    write_control_row(
+        spark, f"{dump_path}/{MANIFEST_FILE}", MANIFEST_SCHEMA,
+        (cfg.db_name, dump_path, int(dump_txid), False, now), append=False,
     )
-    manifest.coalesce(1).write.mode("overwrite").parquet(
-        f"{dump_path}/{MANIFEST_FILE}"
-    )
-    from .snapshot import parquet_row_count
-
     return {
         "dump_path": dump_path,
         "dump_txid": int(dump_txid),
@@ -102,44 +110,72 @@ def _state_dir(cfg: ReplConfig, version: int) -> str:
     return f"{cfg.target_root}/{STATE_TABLE}_v{version}"
 
 
+def _as_state_rows(events: DataFrame) -> DataFrame:
+    """Events as pseudo-state rows: the merge's input shape, cast to
+    ``STATE_SCHEMA`` (no-op casts for the int64/double event columns)."""
+    return events.select(
+        *(
+            F.col(src).cast(f.dataType).alias(f.name)
+            for src, f in zip(("user_id", "event_id", "value"), STATE_SCHEMA)
+        ),
+        F.col("event_type").isin(*DELETE_TYPES).alias("is_delete"),
+    )
+
+
+def _merge(rows: DataFrame) -> DataFrame:
+    """Last writer wins per key: argmax by event id, then drop deleted
+    keys. One shuffle on user_id."""
+    latest = rows.groupBy("user_id").agg(
+        F.max_by(
+            F.struct("last_event_id", "state_value", "is_delete"),
+            "last_event_id",
+        ).alias("s")
+    )
+    return latest.filter(~F.col("s.is_delete")).select(
+        "user_id",
+        F.col("s.last_event_id").alias("last_event_id"),
+        F.col("s.state_value").alias("state_value"),
+    )
+
+
 def read_state(
     spark: SparkSession, cfg: ReplConfig, version: int | None
 ) -> DataFrame:
     """Current replicated state at ``version``.
 
-    Falls back to deriving the state from the bootstrapped events table at
-    the target (replay of everything ≤ version) when no materialized state
-    version exists yet — i.e. the first incremental run after a bootstrap.
+    ``bootstrap_load`` materializes the first version, so a target has a
+    state version at every watermark. A target bootstrapped before that
+    has none at its cut: its state is then derived from the bootstrapped
+    events table, as ``write_state`` derives it.
     """
-    if version is not None and Path(_state_dir(cfg, version)).exists():
-        return spark.read.parquet(_state_dir(cfg, version))
-    boot_events = Path(f"{cfg.target_root}/{EVENTS_TABLE}")
-    if version is not None and boot_events.exists():
-        ev = spark.read.parquet(str(boot_events)).filter(
-            F.col("event_id") <= F.lit(version)
-        )
-        if dict(ev.dtypes).get("ts") == "bigint":  # ns-as-long passthrough
-            pass  # ts unused below; no normalization needed
-        latest = ev.groupBy("user_id").agg(
-            F.max_by(
-                F.struct(
-                    F.col("event_id").alias("last_event_id"),
-                    F.col("value").alias("state_value"),
-                    F.col("event_type").isin(*DELETE_TYPES).alias("is_delete"),
-                ),
-                "event_id",
-            ).alias("s")
-        )
-        return (
-            latest.filter(~F.col("s.is_delete"))
-            .select(
-                "user_id",
-                F.col("s.last_event_id").alias("last_event_id"),
-                F.col("s.state_value").alias("state_value"),
-            )
-        )
-    return spark.createDataFrame(
-        [], "user_id long, last_event_id long, state_value double"
+    if version is None:
+        return spark.createDataFrame([], STATE_SCHEMA)
+    if Path(_state_dir(cfg, version)).exists():
+        return spark.read.schema(STATE_SCHEMA).parquet(_state_dir(cfg, version))
+    return _replayed_state(spark, cfg, version)
+
+
+def _replayed_state(
+    spark: SparkSession, cfg: ReplConfig, version: int
+) -> DataFrame:
+    """The state at ``version`` replayed from the target's bootstrapped
+    events table (every event ≤ version); empty without one."""
+    boot_events = f"{cfg.target_root}/{EVENTS_TABLE}"
+    if not Path(boot_events).exists():
+        return spark.createDataFrame([], STATE_SCHEMA)
+    ev = read_parquet(spark, boot_events).filter(
+        F.col("event_id") <= F.lit(version)
+    )
+    return _merge(_as_state_rows(ev))
+
+
+def write_state(spark: SparkSession, cfg: ReplConfig, version: int) -> None:
+    """Materialize the bootstrapped state at ``version`` as
+    ``user_state_v{version}``. Always a replay of the events, never a
+    copy of an existing version, so a rerun after a crash rewrites the
+    same rows."""
+    _replayed_state(spark, cfg, version).write.mode("overwrite").parquet(
+        _state_dir(cfg, version)
     )
 
 
@@ -158,41 +194,18 @@ def apply_events(
     assert this).
     """
     ensure_engine_confs(spark)
-    from .snapshot import read_manifest_row
-
-    manifest = read_manifest_row(spark, dump_path)
-    dump_txid = manifest["dump_txid"]
+    dump_txid = read_manifest_row(spark, dump_path)["dump_txid"]
     wm = current_wm if current_wm is not None else -1
 
-    new_events = (
-        spark.read.parquet(f"{dump_path}/{EVENTS_TABLE}")
+    new_events = _as_state_rows(
+        read_parquet(spark, f"{dump_path}/{EVENTS_TABLE}")
         # idempotency guard: never re-apply at-or-below the watermark
         .filter(F.col("event_id") > F.lit(wm))
-        .select(
-            "user_id",
-            F.col("event_id").alias("last_event_id"),
-            F.col("value").alias("state_value"),
-            F.col("event_type").isin(*DELETE_TYPES).alias("is_delete"),
-        )
     )
     prev = read_state(spark, cfg, current_wm).withColumn(
         "is_delete", F.lit(False)
     )
-    merged = prev.unionByName(new_events)
-    latest = merged.groupBy("user_id").agg(
-        F.max_by(
-            F.struct("last_event_id", "state_value", "is_delete"),
-            "last_event_id",
-        ).alias("s")
-    )
-    new_state = (
-        latest.filter(~F.col("s.is_delete"))
-        .select(
-            "user_id",
-            F.col("s.last_event_id").alias("last_event_id"),
-            F.col("s.state_value").alias("state_value"),
-        )
-    )
+    new_state = _merge(prev.unionByName(new_events))
     new_state.write.mode("overwrite").parquet(_state_dir(cfg, dump_txid))
     # watermark append = commit (README.md:34-46 contract)
     advance_watermark(spark, watermark_dir, cfg.db_name, dump_txid)

@@ -176,18 +176,26 @@ def _run_locked(
         snap.bootstrap_load(spark, cfg, dump["dump_path"], watermark_dir)
         mode = "bootstrap"
         dump_txid = dump["dump_txid"]
+        attempts, n_events = 1, None
     else:
         # Entry C — incremental with retry (beeline_functions.sh:211-236)
         dump = incr.incremental_dump(spark, cfg, last_repl_id)
         dump_txid = dump["dump_txid"]
         mode = "incremental"
+        attempts, n_events = 0, dump["n_events"]
         if dump["dump_path"] is not None:
+
+            def count(attempt: int, ok: bool) -> None:
+                nonlocal attempts
+                attempts = attempt
+
             incr.with_retry(
                 lambda attempt: incr.apply_events(
                     spark, cfg, dump["dump_path"], watermark_dir, last_repl_id
                 ),
                 max_attempts=cfg.incr_rerun,
                 sleep_s=cfg.rerun_sleep_s,
+                on_attempt=count,
             )
         # distcp -update analog: re-copy only static tables whose payload
         # fingerprint changed since the last run (SURVEY.md §4 row 6)
@@ -206,6 +214,8 @@ def _run_locked(
         "dump_txid": dump_txid,
         "post_load_id": post_load_id,
         "status": status,
+        "attempts": attempts,
+        "n_events": n_events,
         "tables_synced": synced if mode == "incremental" else None,
         "tables_dropped": dropped if mode == "incremental" else None,
         "duration_s": (finished - started).total_seconds(),

@@ -19,13 +19,19 @@ from __future__ import annotations
 
 import datetime as dt
 import json
+import os
+import uuid
 from concurrent.futures import ThreadPoolExecutor
 from pathlib import Path
 
-from pyspark.sql import DataFrame, SparkSession
+import pyarrow as pa
+import pyarrow.parquet as pq
+from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from ..cache import table_fingerprint
+from ..catalog import read_parquet
 from ..session import ensure_engine_confs
 from ..util import rows_df
 from .model import MANIFEST_SCHEMA, WATERMARK_SCHEMA, ReplConfig
@@ -63,8 +69,6 @@ def _parquet_files(path: str | Path) -> list[Path]:
 def parquet_row_count(path: str | Path) -> int:
     """Row count from parquet footers only — no Spark job, no data scan
     (the count a 100 TB verification step can afford)."""
-    import pyarrow.parquet as pq
-
     return sum(pq.ParquetFile(f).metadata.num_rows for f in _parquet_files(path))
 
 
@@ -77,8 +81,6 @@ def parquet_int64_max(path: str | Path, column: str) -> int | None:
     answer). Returns None — caller falls back to the Spark job — when the
     payload has no rows or any populated row group lacks stats (e.g.
     files written with statistics disabled)."""
-    import pyarrow.parquet as pq
-
     best: int | None = None
     for f in _parquet_files(path):
         meta = pq.ParquetFile(f).metadata
@@ -94,58 +96,6 @@ def parquet_int64_max(path: str | Path, column: str) -> int | None:
                 return None
             best = stats.max if best is None else max(best, stats.max)
     return best
-
-
-def _footer_spark_schema(path: str | Path):
-    """Spark StructType from the parquet footer, driver-side, no Spark job
-    (optimization round 15): target-catalog registration re-INFERRED every
-    loaded table's schema — one footer-read Spark job per table per load.
-    Conversion is a strict allowlist of types whose inference result is
-    unambiguous (the fixture/replication surface: ints, floats, strings,
-    booleans, dates, µs-timestamps, binary, and arrays thereof); anything
-    else — ns timestamps under the legacy long read, nested structs, maps
-    — returns None and the caller infers as before."""
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-    from pyspark.sql import types as T
-
-    _PRIM = {
-        pa.int8(): T.ByteType(), pa.int16(): T.ShortType(),
-        pa.int32(): T.IntegerType(), pa.int64(): T.LongType(),
-        pa.float32(): T.FloatType(), pa.float64(): T.DoubleType(),
-        pa.string(): T.StringType(), pa.large_string(): T.StringType(),
-        pa.bool_(): T.BooleanType(), pa.date32(): T.DateType(),
-        pa.binary(): T.BinaryType(), pa.large_binary(): T.BinaryType(),
-    }
-
-    def conv(t):
-        if t in _PRIM:
-            return _PRIM[t]
-        if isinstance(t, pa.TimestampType) and t.unit == "us":
-            # Only UTC-adjusted µs timestamps are unambiguous
-            # (TimestampType). A tz-less µs file infers as TimestampNTZ
-            # under Spark 4's inferTimestampNTZ default — conversion-
-            # ambiguous, so fall back to inference for that table.
-            return T.TimestampType() if t.tz is not None else None
-        if isinstance(t, (pa.ListType, pa.LargeListType)):
-            inner = conv(t.value_type)
-            return T.ArrayType(inner, True) if inner is not None else None
-        return None
-
-    files = _parquet_files(path)
-    if not files:
-        return None
-    arrows = [pq.ParquetFile(f).schema_arrow for f in files]
-    arrow = arrows[0]
-    if any(a != arrow for a in arrows[1:]):
-        return None  # evolved/mixed file set — inference merges, we don't
-    fields = []
-    for name in arrow.names:
-        st = conv(arrow.field(name).type)
-        if st is None:
-            return None
-        fields.append(T.StructField(name, st, True))
-    return T.StructType(fields)
 
 
 def _local_path(uri: str) -> Path | None:
@@ -333,8 +283,6 @@ def repl_status(spark: SparkSession, watermark_dir: str, db_name: str) -> int | 
     local = _local_path(watermark_dir)
     if local is not None:
         try:
-            import pyarrow.parquet as pq
-
             best: tuple | None = None
             wm: int | None = None
             for f in _parquet_files(local):
@@ -351,7 +299,7 @@ def repl_status(spark: SparkSession, watermark_dir: str, db_name: str) -> int | 
                     if best is None or k > best:
                         best, wm = k, lri
             return wm
-        except Exception:  # pragma: no cover — fall back to the Spark read
+        except (OSError, pa.ArrowException):  # unreadable: the Spark read
             pass
     wm = (
         spark.read.schema(WATERMARK_SCHEMA).parquet(watermark_dir)
@@ -369,12 +317,10 @@ def read_manifest_row(spark: SparkSession, dump_path: str) -> dict:
     local = _local_path(f"{dump_path}/{MANIFEST_FILE}")
     if local is not None:
         try:
-            import pyarrow.parquet as pq
-
             rows = pq.read_table(local).to_pylist()
             if len(rows) == 1:
                 return rows[0]
-        except Exception:  # pragma: no cover — fall back to the Spark read
+        except (OSError, pa.ArrowException):  # unreadable: the Spark read
             pass
     return (
         spark.read.schema(MANIFEST_SCHEMA)
@@ -384,15 +330,69 @@ def read_manifest_row(spark: SparkSession, dump_path: str) -> dict:
     )
 
 
+#: Arrow types of the control-row columns (``MANIFEST_SCHEMA``,
+#: ``WATERMARK_SCHEMA``).
+_ARROW_TYPES = {
+    T.StringType: pa.string(), T.LongType: pa.int64(),
+    T.BooleanType: pa.bool_(), T.TimestampType: pa.timestamp("us"),
+}
+
+
+def write_control_row(
+    spark: SparkSession, path: str, schema: T.StructType, row: tuple,
+    append: bool,
+) -> None:
+    """Write one control-plane row — a dump manifest or a watermark — as
+    a parquet file in the table directory ``path``: appended as a new
+    file, or replacing the directory's files.
+
+    A local root is written driver-side with pyarrow: a dot-named temp
+    file, then ``os.replace``, so a reader (``_parquet_files``, pyarrow
+    datasets and Spark all skip dot files) sees the whole row or none of
+    it. A Spark write of one row costs two jobs' worth of work (~50-60 ms
+    of CPU); this costs under a millisecond. Values are encoded as Spark
+    encodes them: a naive timestamp goes through
+    ``TimestampType.toInternal``, the process-local-time reading that
+    PySpark's literal conversion applies, and is stored as INT96. So
+    pyarrow- and Spark-written rows read back identically on either read
+    path. Remote roots take the Spark writer."""
+    local = _local_path(path)
+    if local is None:
+        rows_df(spark, schema, [row]).coalesce(1).write.mode(
+            "append" if append else "overwrite"
+        ).parquet(path)
+        return
+    table = pa.table(
+        [
+            pa.array([f.dataType.toInternal(v)], _ARROW_TYPES[type(f.dataType)])
+            for f, v in zip(schema.fields, row)
+        ],
+        schema=pa.schema([
+            pa.field(f.name, _ARROW_TYPES[type(f.dataType)], f.nullable)
+            for f in schema.fields
+        ]),
+    )
+    local.mkdir(parents=True, exist_ok=True)
+    name = f"part-{uuid.uuid4().hex}.parquet" if append else "part-00000.parquet"
+    tmp = local / f".{name}.tmp"
+    pq.write_table(table, tmp, use_deprecated_int96_timestamps=True)
+    os.replace(tmp, local / name)
+    if not append:
+        for old in _parquet_files(local):
+            if old.name != name:
+                old.unlink()
+
+
 def advance_watermark(
     spark: SparkSession, watermark_dir: str, db_name: str, txid: int
 ) -> None:
     """Append a status row (watermark advances only after successful replay,
-    ``README.md:34-46``). Append-mode parquet: crash-safe — an incomplete
+    ``README.md:34-46``). An appended file is the commit: an incomplete
     load leaves the previous row as the latest."""
     now = dt.datetime.now(dt.timezone.utc).replace(tzinfo=None)
-    row = rows_df(spark, WATERMARK_SCHEMA, [(db_name, txid, now)])
-    row.coalesce(1).write.mode("append").parquet(watermark_dir)
+    write_control_row(
+        spark, watermark_dir, WATERMARK_SCHEMA, (db_name, txid, now), append=True
+    )
 
 
 def bootstrap_dump(
@@ -457,14 +457,10 @@ def bootstrap_dump(
         # views ship as SQL metadata, no data movement (README.md:4)
         (Path(dump_path) / VIEWS_FILE).write_text(json.dumps(DEFAULT_VIEWS))
         now = dt.datetime.now(dt.timezone.utc).replace(tzinfo=None)
-        manifest = rows_df(
-            spark,
-            MANIFEST_SCHEMA,
-            [(cfg.db_name, dump_path, int(dump_txid), True, now)],
-        )
         # manifest last = commit marker
-        manifest.coalesce(1).write.mode("overwrite").parquet(
-            f"{dump_path}/{MANIFEST_FILE}"
+        write_control_row(
+            spark, f"{dump_path}/{MANIFEST_FILE}", MANIFEST_SCHEMA,
+            (cfg.db_name, dump_path, int(dump_txid), True, now), append=False,
         )
     return {"dump_path": dump_path, "dump_txid": int(dump_txid), "tables": tables}
 
@@ -499,6 +495,12 @@ def bootstrap_load(
     with ThreadPoolExecutor(max_workers=min(8, len(table_dirs))) as pool:
         loaded = dict(pool.map(load_one, table_dirs))
     views = register_target_catalog(spark, cfg, sorted(loaded), dump_path)
+    # the first state version, so the target is queryable at the cut and
+    # the first incremental tick merges onto it instead of replaying the
+    # whole bootstrapped stream
+    from .incremental import write_state
+
+    write_state(spark, cfg, manifest["dump_txid"])
     advance_watermark(spark, watermark_dir, cfg.db_name, manifest["dump_txid"])
     return {
         "dump_txid": manifest["dump_txid"],
@@ -520,9 +522,7 @@ def register_target_catalog(
         path = f"{cfg.target_root}/{t}"
         # footer-derived schema skips the per-table inference job
         # (optimization round 15); ambiguous payloads infer as before
-        schema = _footer_spark_schema(path)
-        reader = spark.read.schema(schema) if schema is not None else spark.read
-        reader.parquet(path).createOrReplaceTempView(vname)
+        read_parquet(spark, path).createOrReplaceTempView(vname)
         names[t] = vname
     created: list[str] = []
     views_file = Path(dump_path) / VIEWS_FILE

@@ -132,8 +132,11 @@ def rows_df(
     ``spark.createDataFrame(list, ...)`` routes tiny metadata relations
     through a Python-RDD scan, which costs a Python worker round-trip per
     job (~4 s per write in local mode — measured). Building the same rows
-    as ``range(1) → explode(array(struct(lit…)))`` keeps manifest/watermark
-    bookkeeping pure JVM: ~20× faster and no Python in executor tasks.
+    as ``range(1) → explode(array(struct(lit…)))`` keeps small metadata
+    relations pure JVM: ~20× faster and no Python in executor tasks. The
+    replication manifest and watermark rows take this path only for
+    remote roots; local roots are written driver-side by
+    ``repl.snapshot.write_control_row``.
     """
     if isinstance(schema, str):
         schema = _parse_datatype_string(schema)

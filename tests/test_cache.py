@@ -172,3 +172,25 @@ def test_memoized_alias_resolves_to_fresh_expr_ids(spark):
     one = spark.range(5).groupBy().agg(n)
     two = spark.range(7).selectExpr("id % 2 AS g").groupBy("g").agg(n)
     assert n_expr_id(one) != n_expr_id(two)
+
+
+def test_table_dir_rewritten_in_place_is_not_served_stale(spark, tmp_path):
+    """Rewriting a file inside a table directory leaves the directory's
+    mtime unchanged; ``load_table`` must still see the new schema."""
+    import pyarrow as pa
+
+    from hive3_replication_spark.catalog import load_table
+
+    sf = tmp_path / "sf"
+    (sf / "nation.parquet").mkdir(parents=True)
+    part = sf / "nation.parquet" / "part-0.parquet"
+    pq.write_table(pa.table({"n_nationkey": [0, 1]}), part)
+    assert load_table(spark, str(sf), "nation").columns == ["n_nationkey"]
+    mtime = os.stat(sf / "nation.parquet").st_mtime_ns
+    pq.write_table(
+        pa.table({"n_nationkey": [0, 1], "n_name": ["A", "B"]}), part
+    )
+    assert os.stat(sf / "nation.parquet").st_mtime_ns == mtime
+    df = load_table(spark, str(sf), "nation")
+    assert df.columns == ["n_nationkey", "n_name"]
+    assert sorted(map(tuple, df.collect())) == [(0, "A"), (1, "B")]

@@ -734,3 +734,298 @@ def test_parity_resume_never_erases_failures():
     # record keeps "gone" out of the run set
     assert "gone" not in [k for k in targets if k not in res]
     assert "k00" not in res and "k00" in targets  # registered force OK
+
+
+# -- control rows, crash convergence and footer schemas ----------------------
+
+
+def _jobs_in(spark, group: str, fn):
+    """(fn(), the ids of the Spark jobs it ran) via a job group."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return out, sc.statusTracker().getJobIdsForGroup(group)
+
+
+def _fail_once(monkeypatch, module, name: str) -> list:
+    """Make ``module.name`` raise on its first call only; returns the
+    call log."""
+    real = getattr(module, name)
+    calls: list = []
+
+    def wrapper(*args, **kwargs):
+        calls.append(name)
+        if len(calls) == 1:
+            raise RuntimeError(f"injected failure in {name}")
+        return real(*args, **kwargs)
+
+    monkeypatch.setattr(module, name, wrapper)
+    return calls
+
+
+def _state_rows(spark, cfg, version: int) -> list:
+    return sorted(
+        map(tuple, spark.read.parquet(f"{cfg.target_root}/user_state_v{version}").collect())
+    )
+
+
+def test_watermark_rows_read_alike_across_writers_and_readers(
+    spark, tmp_path, monkeypatch
+):
+    """A watermark dir holding an old Spark-written (INT96) row and a new
+    pyarrow-written row gives the same ``repl_status`` on the pyarrow
+    read path and the Spark read path; the pyarrow path runs no job."""
+    import pyarrow.parquet as pq
+
+    from hive3_replication_spark.repl import snapshot as snap
+
+    wm = str(tmp_path / "wm")
+    with monkeypatch.context() as m:  # the Spark writer, as before
+        m.setattr(snap, "_local_path", lambda uri: None)
+        snap.advance_watermark(spark, wm, "db", 5)
+        snap.advance_watermark(spark, wm, "other", 50)
+    snap.advance_watermark(spark, wm, "db", 9)
+    files = snap._parquet_files(wm)
+    assert len(files) == 3
+    for f in files:  # both writers encode the timestamp as INT96
+        col = pq.ParquetFile(f).schema.column(2)
+        assert (col.name, col.physical_type) == ("updated_ts", "INT96")
+
+    arrow_wm, jobs = _jobs_in(
+        spark, "wm-pyarrow", lambda: snap.repl_status(spark, wm, "db")
+    )
+    assert arrow_wm == 9
+    assert jobs == []
+    with monkeypatch.context() as m:
+        m.setattr(snap, "_local_path", lambda uri: None)
+        spark_wm, jobs = _jobs_in(
+            spark, "wm-spark", lambda: snap.repl_status(spark, wm, "db")
+        )
+        assert snap.repl_status(spark, wm, "other") == 50
+    assert spark_wm == arrow_wm
+    assert jobs, "the forced Spark path must run a job"
+
+
+def test_control_row_temp_files_are_ignored_by_every_reader(
+    spark, tmp_path, monkeypatch
+):
+    """A crash inside ``write_control_row`` leaves a dot-named temp file.
+    It holds a whole row here, and still no reader may see it."""
+    import datetime as dt
+    import shutil
+
+    import pyarrow.parquet as pq
+
+    from hive3_replication_spark.repl import snapshot as snap
+    from hive3_replication_spark.repl.model import MANIFEST_SCHEMA
+
+    wm, dump = tmp_path / "wm", tmp_path / "dump"
+    snap.advance_watermark(spark, str(wm), "db", 7)
+    row = ("db", str(dump), 7, False, dt.datetime(2026, 1, 1))
+    snap.write_control_row(
+        spark, f"{dump}/{snap.MANIFEST_FILE}", MANIFEST_SCHEMA, row, append=False
+    )
+    # a leftover temp file carrying a later watermark / another manifest
+    (done,) = snap._parquet_files(wm)
+    snap.advance_watermark(spark, str(tmp_path / "later"), "db", 99)
+    (later,) = snap._parquet_files(tmp_path / "later")
+    shutil.copy(later, wm / f".{later.name}.tmp")
+    mdir = dump / snap.MANIFEST_FILE
+    shutil.copy(mdir / "part-00000.parquet", mdir / ".part-00000.parquet.tmp")
+
+    assert snap._parquet_files(wm) == [done]
+    assert pq.read_table(wm).num_rows == 1
+    assert spark.read.parquet(str(wm)).count() == 1
+    assert snap.repl_status(spark, str(wm), "db") == 7
+    assert snap.read_manifest_row(spark, str(dump))["dump_txid"] == 7
+    with monkeypatch.context() as m:
+        m.setattr(snap, "_local_path", lambda uri: None)
+        assert snap.repl_status(spark, str(wm), "db") == 7
+        assert snap.read_manifest_row(spark, str(dump))["dump_txid"] == 7
+
+
+def test_remote_control_rows_take_the_spark_writer(spark, monkeypatch):
+    """A remote-looking root cannot be written driver-side: the row goes
+    through ``rows_df`` and Spark's writer (recorded; no HDFS needed)."""
+    import datetime as dt
+
+    from hive3_replication_spark.repl import snapshot as snap
+    from hive3_replication_spark.repl.model import WATERMARK_SCHEMA
+
+    calls = []
+
+    class _Writer:
+        def coalesce(self, n):
+            return self
+
+        @property
+        def write(self):
+            return self
+
+        def mode(self, mode):
+            calls.append(mode)
+            return self
+
+        def parquet(self, path):
+            calls.append(path)
+
+    def fake_rows_df(spark_, schema, rows):
+        calls.append((schema, rows))
+        return _Writer()
+
+    monkeypatch.setattr(snap, "rows_df", fake_rows_df)
+    row = ("db", 3, dt.datetime(2026, 1, 1))
+    snap.write_control_row(spark, "hdfs:/x/wm", WATERMARK_SCHEMA, row, append=True)
+    assert calls == [(WATERMARK_SCHEMA, [row]), "append", "hdfs:/x/wm"]
+    assert not Path("hdfs:").exists()
+
+
+def test_transient_apply_failure_is_retried_and_reported(
+    spark, repl_env, monkeypatch
+):
+    """The run report carries the replay's attempts and the delta size."""
+    cfg, run_dir, wm_dir, ev, cut, max_id = repl_env
+    boot = run_replication(spark, cfg, run_dir, wm_dir)
+    assert (boot["attempts"], boot["n_events"]) == (1, None)
+    ev.filter(F.col("event_id") > cut).write.mode("append").parquet(
+        f"{cfg.source_root}/events.parquet"
+    )
+    calls = _fail_once(monkeypatch, incr, "apply_events")
+    report = run_replication(spark, cfg, run_dir, wm_dir)
+    assert len(calls) == 2
+    assert report["status"] == STATUS_SUCCESS
+    assert report["attempts"] == 2
+    assert report["n_events"] == max_id - cut
+    noop = run_replication(spark, cfg, run_dir, wm_dir)
+    assert (noop["attempts"], noop["n_events"]) == (0, 0)
+
+
+#: crash point → (the mode of the run that fails, module, the function
+#: that fails once)
+CRASH_POINTS = {
+    "bootstrap_state_written": ("bootstrap", "snapshot", "advance_watermark"),
+    "incremental_manifest_written": ("incremental", "incremental", "apply_events"),
+    "incremental_state_written": ("incremental", "incremental", "advance_watermark"),
+}
+
+
+@pytest.mark.parametrize("point", sorted(CRASH_POINTS))
+def test_crash_at_a_moved_write_converges_on_rerun(
+    spark, repl_env, monkeypatch, point
+):
+    """Fail once at a durable write, rerun, and the target's state and
+    watermark equal those of a clean run over the same source."""
+    import dataclasses
+
+    from hive3_replication_spark.repl import snapshot as snap
+
+    cfg, run_dir, wm_dir, ev, cut, max_id = repl_env
+    root = Path(cfg.target_root).parent
+    cfg = dataclasses.replace(cfg, incr_rerun=1)
+    clean = dataclasses.replace(
+        cfg, target_root=str(root / "clean_target"),
+        repl_root=str(root / "clean_repl"),
+    )
+    clean_wm = str(root / "clean_wm")
+    mode, module, fn = CRASH_POINTS[point]
+    module = {"snapshot": snap, "incremental": incr}[module]
+
+    def run(c, w):
+        return run_replication(spark, c, run_dir, w)
+
+    def crash_then_rerun():
+        calls = _fail_once(monkeypatch, module, fn)
+        with pytest.raises(Exception):
+            run(cfg, wm_dir)
+        assert calls == [fn]
+        monkeypatch.undo()
+        report = run(cfg, wm_dir)
+        assert (report["mode"], report["status"]) == (mode, STATUS_SUCCESS)
+
+    assert run(clean, clean_wm)["status"] == STATUS_SUCCESS
+    if mode == "bootstrap":
+        crash_then_rerun()
+    else:
+        assert run(cfg, wm_dir)["status"] == STATUS_SUCCESS
+    assert _state_rows(spark, cfg, cut) == _state_rows(spark, clean, cut)
+
+    ev.filter(F.col("event_id") > cut).write.mode("append").parquet(
+        f"{cfg.source_root}/events.parquet"
+    )
+    assert run(clean, clean_wm)["status"] == STATUS_SUCCESS
+    if mode == "incremental":
+        crash_then_rerun()
+    else:
+        assert run(cfg, wm_dir)["status"] == STATUS_SUCCESS
+    assert snap.repl_status(spark, wm_dir, cfg.db_name) == max_id
+    assert snap.repl_status(spark, clean_wm, cfg.db_name) == max_id
+    assert _state_rows(spark, cfg, max_id) == _state_rows(spark, clean, max_id)
+
+
+def test_bootstrap_materializes_the_state_at_its_cut(spark, repl_env):
+    """The bootstrap writes ``user_state_v{cut}`` before its watermark, so
+    the target's state is queryable at once and equals last-writer-wins
+    over the events up to the cut."""
+    cfg, run_dir, wm_dir, ev, cut, max_id = repl_env
+    run_replication(spark, cfg, run_dir, wm_dir)
+    w = Window.partitionBy("user_id").orderBy(F.desc("event_id"))
+    expected = sorted(
+        map(
+            tuple,
+            ev.filter(F.col("event_id") <= cut)
+            .withColumn("rn", F.row_number().over(w))
+            .filter("rn = 1 AND event_type <> 'error'")
+            .select(
+                "user_id",
+                F.col("event_id").alias("last_event_id"),
+                F.col("value").alias("state_value"),
+            )
+            .collect(),
+        )
+    )
+    assert _state_rows(spark, cfg, cut) == expected
+
+
+def _assert_footer_matches_inference(spark, path) -> None:
+    from hive3_replication_spark.catalog import footer_schema
+
+    got = footer_schema(spark, path)
+    assert got is not None, f"{path}: footer schema did not map"
+    assert got == spark.read.parquet(str(path)).schema, path
+
+
+FIXTURE_TABLES = sorted(
+    str(p) for p in Path(SF_DIR).parent.glob("sf*/*.parquet")
+)
+
+
+@pytest.mark.parametrize(
+    "path", FIXTURE_TABLES, ids=[p.split("/")[-2] + "/" + p.split("/")[-1] for p in FIXTURE_TABLES]
+)
+def test_footer_schema_equals_inferred_schema_fixture(spark, path):
+    _assert_footer_matches_inference(spark, path)
+
+
+def test_footer_schema_equals_inferred_schema_replication_payloads(
+    spark, repl_env
+):
+    """Every payload the replication reads back: the bootstrap dump's and
+    target's tables, an incremental dump, and the state versions."""
+    cfg, run_dir, wm_dir, ev, cut, max_id = repl_env
+    run_replication(spark, cfg, run_dir, wm_dir)
+    ev.filter(F.col("event_id") > cut).write.mode("append").parquet(
+        f"{cfg.source_root}/events.parquet"
+    )
+    run_replication(spark, cfg, run_dir, wm_dir)
+    stage = Path(cfg.repl_root) / cfg.db_name
+    payloads = [
+        *(p for p in (stage / f"boot_{cut}").iterdir() if not p.name.startswith(("_", "."))),
+        stage / f"incr_{cut}_{max_id}" / "events",
+        *Path(cfg.target_root).iterdir(),
+    ]
+    assert any(p.name == f"user_state_v{max_id}" for p in payloads)
+    for p in payloads:
+        _assert_footer_matches_inference(spark, p)
