@@ -4,8 +4,8 @@ relations.
 An entry lives in a *slot* and is valid for a *key*:
 
 - A slot bounds what is held. Layouts and plan choices take one slot per
-  (site, root dir); a persisted relation takes one slot per site, so a new
-  corpus replaces the old one.
+  (site, root dir), per-file answers one per (site, table); a persisted
+  relation takes one slot per site, so a new corpus replaces the old one.
 - A key is the site's governing parameters plus a content fingerprint of
   the input tables the site reads (``inputs``), so a table rewritten in
   place under the same path misses instead of serving the old answer.
@@ -16,10 +16,16 @@ removed. One re-entrant lock guards the table and is held across each
 build, so a value is built once per key even under concurrent callers, and
 a build may itself read the cache (the pair relation reads the shingle
 relation).
+
+A local checkpoint (``checkpoint``) takes one slot per site too: a site's
+new checkpoint releases the one it last made. Its lineage is cut, so a
+plan that reads a released checkpoint fails instead of recomputing: run a
+built plan before the same site checkpoints again or ``clear()`` runs.
 """
 
 from __future__ import annotations
 
+import os
 import stat
 import threading
 from collections.abc import Callable
@@ -33,7 +39,8 @@ class _Entry(NamedTuple):
     key: Any
     value: Any
     dispose: Callable[[Any], None] | None
-    #: persisted relations are what ``clear()`` drops
+    #: relations held in executor storage (persists and local
+    #: checkpoints) are what ``clear()`` drops
     persisted: bool
 
 
@@ -54,12 +61,39 @@ def table_fingerprint(path: str | Path) -> tuple | None:
         return None
     if not stat.S_ISDIR(st.st_mode):
         return (("", st.st_size, st.st_mtime_ns),)
-    files = sorted(
-        (str(f.relative_to(p)), f.stat())
-        for f in p.rglob("*")
-        if f.is_file() and not f.name.startswith((".", "_"))
-    )
-    return tuple((rel, s.st_size, s.st_mtime_ns) for rel, s in files)
+    return tuple(sorted(_data_files(str(p), "")))
+
+
+def _data_files(root: str, rel: str):
+    """(relative name, size, st_mtime_ns) of every file under ``root`` whose
+    name does not start with ``.`` or ``_``. One ``scandir`` per directory
+    and one ``stat`` per file: an append-only table gains a file per
+    write, and its fingerprint is taken on every read."""
+    with os.scandir(root) as entries:
+        for e in entries:
+            if e.is_dir(follow_symlinks=False):
+                yield from _data_files(e.path, f"{rel}{e.name}/")
+            elif e.is_file() and not e.name.startswith((".", "_")):
+                s = e.stat()
+                yield f"{rel}{e.name}", s.st_size, s.st_mtime_ns
+
+
+def per_file(site: str, path: str | Path, read: Callable[[Path], Any]):
+    """``read(f)`` for each data file of the table at ``path``, or None when
+    ``path`` cannot be stat'ed. A file's answer is kept in the (site,
+    table) slot under its ``table_fingerprint`` triple, so a table that
+    only gains files is read one new file at a time and a file rewritten
+    in place is read again. Every file is stat'ed before it is read, so a
+    rewrite racing the read is seen on the next call."""
+    fp = table_fingerprint(path)
+    if fp is None:
+        return None
+    slot = (site, str(path))
+    with _LOCK:
+        old = peek(slot) or {}
+        new = {t: old[t] if t in old else read(Path(path, t[0])) for t in fp}
+        _ENTRIES[slot] = _Entry(None, new, None, persisted=False)
+    return list(new.values())
 
 
 def inputs(sf_dir: str, *tables: str) -> tuple:
@@ -118,6 +152,25 @@ def persist(site: str, df):
     return get(site, object(), df.persist, _unpersist, persisted=True)
 
 
+def _release_checkpoint(df) -> None:
+    # a local checkpoint's plan is a LogicalRDD over the checkpointed RDD;
+    # Dataset.unpersist would not find it in the cache manager
+    df._jdf.logicalPlan().rdd().unpersist(False)
+
+
+def checkpoint(site: str, df):
+    """``df.localCheckpoint()`` held in ``site``'s slot. The new checkpoint
+    is materialized before the site's previous one is released, so a loop
+    may checkpoint each round's relation from the last round's."""
+    value = df.localCheckpoint()
+    with _LOCK:
+        drop(("checkpoint", site))
+        _ENTRIES[("checkpoint", site)] = _Entry(
+            None, value, _release_checkpoint, persisted=True
+        )
+    return value
+
+
 def peek(slot: Any) -> Any:
     """The value held in ``slot``, or None."""
     with _LOCK:
@@ -134,8 +187,9 @@ def drop(slot: Any) -> None:
 
 
 def clear() -> None:
-    """Drop every persisted relation. Layouts and plan choices stay: their
-    keys carry the input fingerprint, so they cannot go stale."""
+    """Drop every persisted relation and local checkpoint. Layouts and plan
+    choices stay: their keys carry the input fingerprint, so they cannot
+    go stale."""
     with _LOCK:
         for slot in [s for s, e in _ENTRIES.items() if e.persisted]:
             drop(slot)

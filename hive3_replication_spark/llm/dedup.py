@@ -17,7 +17,7 @@ from pyspark.sql import functions as F
 
 from .. import cache
 from ..catalog import load_embeddings, load_table
-from ..util import expr_memo, fan_out
+from ..util import expr_memo, fan_out, shuffle_partitions
 
 #: Drop blocking buckets larger than this before pairing (skew guard).
 MAX_BUCKET = 1000
@@ -368,11 +368,11 @@ def _ngram_pair_scores(
     # is OUTPUT-proportional (measured at sf0.1: 3.9 MB in → 20.5 MB of
     # expanded pairs, coalesced to 3 tasks holding 4.2 s of CPU = 1.8 s
     # of wall on a 32-core host; guide §2.5). The count comes from the
-    # shuffle-partitions conf, not the local core count, so it stays
-    # scale-adaptive on a cluster.
-    n_shuf = int(
-        sh_f.sparkSession.conf.get("spark.sql.shuffle.partitions", "200")
-    )
+    # shuffle-partitions conf, which ``session.get_spark`` sizes to two
+    # per worker thread (a fixed 32 ran this stage as 32 tasks on
+    # perfbench's 2 threads, 0.60 s of task CPU for 500 documents) and a
+    # cluster sets to its cores, so it stays scale-adaptive.
+    n_shuf = shuffle_partitions(sh_f.sparkSession)
     sh_f = sh_f.repartition(n_shuf, "shingle")
     postings = sh_f.groupBy("shingle").agg(
         F.sort_array(
@@ -495,10 +495,10 @@ def connected_components(
     stable (count, hash-sum) fingerprint of the edge set — one tiny
     aggregate per round; the round budget failing loudly is the guard
     against silently shipping a partial closure."""
-    edges = pairs.select("doc_a", "doc_b").localCheckpoint()
+    edges = cache.checkpoint("cc_edges", pairs.select("doc_a", "doc_b"))
     fp = None
     for rnd in range(1, max_rounds + 1):
-        edges = _small_star(_large_star(edges)).localCheckpoint()
+        edges = cache.checkpoint("cc_edges", _small_star(_large_star(edges)))
         row = edges.agg(
             F.count("*").alias("n"),
             # decimal(38,0) sum: exact and overflow-free under ANSI mode
@@ -547,7 +547,7 @@ def resolve_components(pairs: DataFrame) -> tuple[DataFrame, int]:
     Loop-carried relations are localCheckpointed per round so the driver
     iterates over O(1) plans (on a real cluster use reliable
     ``checkpoint()`` to survive executor loss mid-algorithm)."""
-    base = pairs.select("doc_a", "doc_b").localCheckpoint()
+    base = cache.checkpoint("rc_base", pairs.select("doc_a", "doc_b"))
     edges = base.select(
         F.explode(
             F.array(
@@ -563,14 +563,14 @@ def resolve_components(pairs: DataFrame) -> tuple[DataFrame, int]:
     # but the loop now starts from the round-1 state, so every graph
     # converges one full join+union+groupBy round (and its convergence
     # action) earlier. Labels at the fixpoint are unchanged.
-    labels = (
+    labels = cache.checkpoint(
+        "rc_labels",
         edges.groupBy("src")
         .agg(F.min("dst").alias("mn"))
         .select(
             F.col("src").alias("node"),
             F.least("src", "mn").alias("label"),
-        )
-        .localCheckpoint()
+        ),
     )
     # exact-integer label sum decreases monotonically; equal sum ⇒ fixpoint
     prev_sum = labels.agg(F.sum("label")).first()[0]
@@ -578,11 +578,11 @@ def resolve_components(pairs: DataFrame) -> tuple[DataFrame, int]:
         msgs = edges.join(labels, edges.src == labels.node).select(
             F.col("dst").alias("node"), "label"
         )
-        labels = (
+        labels = cache.checkpoint(
+            "rc_labels",
             msgs.union(labels.select("node", "label"))
             .groupBy("node")
-            .agg(F.min("label").alias("label"))
-            .localCheckpoint()
+            .agg(F.min("label").alias("label")),
         )
         cur_sum = labels.agg(F.sum("label")).first()[0]
         if cur_sum == prev_sum:
@@ -879,7 +879,7 @@ def llm_dedup_minhash(
     # agg map side ran twice per invocation). localCheckpoint it — the
     # _batch_candidates idiom; n_docs × bands rows — so the sig agg and
     # the band explode run once (alternating A/B: −0.55 s at sf0.1).
-    banded = banded.localCheckpoint()
+    banded = cache.checkpoint("minhash_banded", banded)
     # component-match count via zip_with over the packed arrays — one
     # narrow expression instead of 32 column equalities (plan width, not
     # execution, was the measured cost of the column form)
@@ -1489,10 +1489,15 @@ def llm_dedup_semantic(
     # splits and no exchange is added. Assignment and the quantized
     # recompute are partition-invariant by design, so results are
     # bit-identical.
-    pts = fan_out(
-        _sem_vectors(documents).select(F.col("doc_id").alias("vec_id"), "x"),
-        probe=documents,
-    ).localCheckpoint()
+    pts = cache.checkpoint(
+        "semantic_points",
+        fan_out(
+            _sem_vectors(documents).select(
+                F.col("doc_id").alias("vec_id"), "x"
+            ),
+            probe=documents,
+        ),
+    )
     cent = pts.filter(
         (F.col("vec_id") % SEM_STEP == 0)
         & (F.col("vec_id") <= SEM_STEP * (SEM_K - 1))
@@ -1507,9 +1512,12 @@ def llm_dedup_semantic(
     # runs once, not per branch (same idiom as resolve_components; at
     # 100 TB this is the corpus-sized assignment relation any SemDeDup
     # run materializes — use reliable checkpoint() there)
-    mem = a2.select(
-        F.col("vec_id").alias("doc_id"), F.col("cluster").alias("cell"), "x"
-    ).localCheckpoint()
+    mem = cache.checkpoint(
+        "semantic_members",
+        a2.select(
+            F.col("vec_id").alias("doc_id"), F.col("cluster").alias("cell"), "x"
+        ),
+    )
     big = (
         mem.groupBy("cell")
         .agg(F.count("*").alias("csz"))

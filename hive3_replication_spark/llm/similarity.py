@@ -473,10 +473,13 @@ def _batch_candidates(
     # and the fixture embeddings are one parquet split — without the
     # spread the checkpoint materialization was a ~0.6 s single-task
     # stage at sf0.1 (32 idle cores); a no-op at warehouse scale.
-    banded = fan_out(emb).select(
-        "vec_id",
-        F.explode(_band_sig("embedding", dim)).alias("band"),
-    ).localCheckpoint()
+    banded = cache.checkpoint(
+        "batch_banded",
+        fan_out(emb).select(
+            "vec_id",
+            F.explode(_band_sig("embedding", dim)).alias("band"),
+        ),
+    )
     q_bands = banded.filter(F.col("vec_id") < 10).select(
         F.col("vec_id").alias("q_id"), "band"
     )

@@ -402,15 +402,15 @@ def llm_domain_authority(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the plan never re-expands a prior iteration's tree (the L19 /
     # label-propagation idiom; the relation is domain-count rows, so the
     # eager checkpoint is control-plane cost)
-    state = (
+    state = cache.checkpoint(
+        "pagerank_state",
         doms.join(F.broadcast(outw), doms.domain_id == outw.src_id, "left")
         .select(
             "domain_id",
             "host",
             F.coalesce("out_w", F.lit(0)).alias("out_w"),
             F.lit(_PR_SCALE).cast("bigint").alias("pr0"),
-        )
-        .localCheckpoint()
+        ),
     )
     for prev, nxt in (("pr0", "pr1"), ("pr1", "pr2")):
         mass = (
@@ -443,7 +443,7 @@ def llm_domain_authority(spark: SparkSession, sf_dir: str) -> DataFrame:
             # stays lazy so the returned plan exposes the per-iteration
             # shape (edge relation ⋈ broadcast rank vector → one hash
             # agg) for the plan gate and EXPLAIN users
-            state = state.localCheckpoint()
+            state = cache.checkpoint("pagerank_state", state)
     return state.select("host", "out_w", "pr1", "pr2")
 
 

@@ -23,7 +23,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from .. import cache
 from ..catalog import load_table
+from ..util import shuffle_partitions
 
 
 def round_away_sql(expr: str, scale: int) -> str:
@@ -510,7 +512,7 @@ def ts_anomaly_mad(spark: SparkSession, sf_dir: str) -> DataFrame:
     # scanned twice (the MAD histogram and the output); checkpointing
     # med stops the plan re-expanding its histogram window under each of
     # dev's consumers (the L37 loop-state idiom — control-plane cost)
-    med = lower_median(ev, "v_q", "med_milli").localCheckpoint()
+    med = cache.checkpoint("mad_median", lower_median(ev, "v_q", "med_milli"))
     dev = ev.join(F.broadcast(med), "event_type").select(
         "event_id",
         "event_type",
@@ -1367,7 +1369,7 @@ def ts_downsample_lttb_hier(spark: SparkSession, sf_dir: str) -> DataFrame:
     post-AQE partition), which would serialize all n/500 Arrow groups
     (~4 ms each) into one task."""
     pts = _lttb_hier_chunked_pts(spark, sf_dir)
-    n_parts = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
+    n_parts = shuffle_partitions(spark)
 
     # explicit user repartition on the group keys: satisfies the
     # grouped-map's ClusteredDistribution (no further exchange) and is
@@ -1406,14 +1408,14 @@ def _lttb_hier_chunked_pts(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("long")
         .alias("y"),
     )
-    n_parts = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
+    n_parts = shuffle_partitions(spark)
     # distributed per-series rank: lexicographic range partitioning on the
     # full sort key makes cross-partition order consistent, so
     # global rn = (rows of this series in earlier partitions) + local rank
-    parted = (
+    parted = cache.checkpoint(  # feeds the offset agg AND the main pass
+        "lttb_ranges",
         base.repartitionByRange(n_parts, "event_type", "x", "event_id")
-        .withColumn("pid", F.spark_partition_id())
-        .localCheckpoint()  # feeds the offset agg AND the main pass
+        .withColumn("pid", F.spark_partition_id()),
     )
     offsets = (
         parted.groupBy("pid", "event_type")

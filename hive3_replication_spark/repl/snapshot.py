@@ -30,7 +30,7 @@ from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from ..cache import table_fingerprint
+from ..cache import per_file, table_fingerprint
 from ..catalog import read_parquet
 from ..session import ensure_engine_confs
 from ..util import rows_df
@@ -72,6 +72,30 @@ def parquet_row_count(path: str | Path) -> int:
     return sum(pq.ParquetFile(f).metadata.num_rows for f in _parquet_files(path))
 
 
+#: A row-group's statistics lack min/max, or the file lacks the column:
+#: the footers cannot give the answer.
+_NO_STATS = object()
+
+
+def _footer_int64_max(f: Path, column: str):
+    """MAX of ``column`` over one file's populated row groups: None when
+    it has no rows, ``_NO_STATS`` when its footer cannot say."""
+    meta = pq.ParquetFile(f).metadata
+    idx = {meta.schema.column(i).name: i for i in range(meta.num_columns)}
+    if column not in idx:
+        return _NO_STATS
+    best = None
+    for rg in range(meta.num_row_groups):
+        grp = meta.row_group(rg)
+        if grp.num_rows == 0:
+            continue
+        stats = grp.column(idx[column]).statistics
+        if stats is None or not stats.has_min_max:
+            return _NO_STATS
+        best = stats.max if best is None else max(best, stats.max)
+    return best
+
+
 def parquet_int64_max(path: str | Path, column: str) -> int | None:
     """MAX of an int64 column from parquet row-group statistics only — the
     same footer-only discipline as ``parquet_row_count`` (optimization
@@ -80,22 +104,19 @@ def parquet_int64_max(path: str | Path, column: str) -> int | None:
     present in every Spark/DuckDB-written file, so the footer IS the
     answer). Returns None — caller falls back to the Spark job — when the
     payload has no rows or any populated row group lacks stats (e.g.
-    files written with statistics disabled)."""
-    best: int | None = None
-    for f in _parquet_files(path):
-        meta = pq.ParquetFile(f).metadata
-        idx = {meta.schema.column(i).name: i for i in range(meta.num_columns)}
-        if column not in idx:
-            return None
-        for rg in range(meta.num_row_groups):
-            grp = meta.row_group(rg)
-            if grp.num_rows == 0:
-                continue
-            stats = grp.column(idx[column]).statistics
-            if stats is None or not stats.has_min_max:
-                return None
-            best = stats.max if best is None else max(best, stats.max)
-    return best
+    files written with statistics disabled).
+
+    A file's answer is reused while its (name, size, st_mtime_ns) is
+    unchanged (``cache.per_file``), so an incremental source that gains a
+    file per tick opens one footer per tick, and a file rewritten in place
+    is read again."""
+    maxes = per_file(
+        f"int64_max:{column}", path, lambda f: _footer_int64_max(f, column)
+    )
+    maxes = [m for m in maxes or () if m is not None]
+    if any(m is _NO_STATS for m in maxes):
+        return None
+    return max(maxes, default=None)
 
 
 def _local_path(uri: str) -> Path | None:

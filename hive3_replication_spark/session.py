@@ -10,7 +10,14 @@ Scale notes (100 TB design point):
 - AQE on: runtime join-strategy switching, skew-join splitting, and shuffle
   partition coalescing replace hand tuning per query.
 - ``spark.sql.shuffle.partitions`` is only the *initial* number; AQE coalesces.
-  On a real cluster set it to ~2-3x total cores.
+  Exchanges AQE cannot coalesce keep it: a pinned ``repartition(n, ...)``,
+  a ``localCheckpoint()`` of a post-shuffle relation and a persisted
+  relation. So ``get_spark`` sizes it to the session's worker threads:
+  ``local[k]`` gets ``2*k`` (``shuffle_partitions_for``). The old fixed
+  32, tuned on a 32-core host, ran 32-task stages on 2 threads: one
+  perfbench ``analytics`` round on ``local[2]`` ran 582 tasks over 500
+  documents, and ``2*k`` cut its work CPU by about a third. A cluster
+  master keeps 32; on a real cluster set it to ~2-3x total cores.
 - Arrow on: every pandas UDF / mapInPandas transfer is vectorized.
 - Session timezone pinned to UTC so event-time windows are cluster-invariant.
 - Generated code is kept across re-runs: the codegen class cache holds
@@ -21,6 +28,7 @@ Scale notes (100 TB design point):
 from __future__ import annotations
 
 import os
+import re
 
 from pyspark.sql import SparkSession
 
@@ -71,6 +79,38 @@ RUNTIME_CONFS: dict[str, str] = {
 # profiled CodeHeap 92 of its 117 MB.
 CODEGEN_CACHE_ENTRIES = 4096
 
+#: Initial shuffle partitions for a master that is not ``local``: the
+#: engine's long-standing default, left for the cluster to override.
+CLUSTER_SHUFFLE_PARTITIONS = 32
+
+#: ``local``, ``local[k]``, ``local[*]``, ``local[k,f]`` and ``local[*,f]``
+#: (f = task failures allowed), the local masters Spark accepts.
+_LOCAL_MASTER = re.compile(r"local(?:\[(\*|\d+)(?:\s*,\s*\d+)?\])?")
+
+
+def shuffle_partitions_for(
+    master: str, cores: int, requested: int | None = None
+) -> int:
+    """The initial shuffle partition count ``get_spark`` gives a session on
+    ``master``: ``requested`` if given, else ``$SPARK_SHUFFLE_PARTITIONS``
+    if set, else two per worker thread of a local master (``local[*]``
+    runs ``cores`` threads, bare ``local`` one) and
+    ``CLUSTER_SHUFFLE_PARTITIONS`` for any other master. Two per thread
+    keeps every thread busy when one task runs long; tier-1's ``local[4]``
+    at 8 partitions has always run at that ratio."""
+    if requested is not None:
+        return requested
+    env = os.environ.get("SPARK_SHUFFLE_PARTITIONS")
+    if env:
+        return int(env)
+    m = _LOCAL_MASTER.fullmatch(master.strip())
+    if m is None:
+        return CLUSTER_SHUFFLE_PARTITIONS
+    threads = m.group(1)
+    if threads is None:
+        return 2
+    return 2 * max(1, cores if threads == "*" else int(threads))
+
 
 def ensure_engine_confs(spark: SparkSession) -> SparkSession:
     """Apply engine-required runtime confs to an existing session.
@@ -115,11 +155,16 @@ def ensure_engine_confs(spark: SparkSession) -> SparkSession:
 
 def _default_driver_memory() -> str:
     """Pick a local-mode driver heap that fits the host: 24g only when the
-    machine actually has headroom for it (>= 96 GiB), else the conservative
-    8g. In local mode the driver JVM hosts all executor threads so this IS
-    the executor heap; sizing it to the 128 GiB test host unconditionally
-    would let a long suite drive a small dev box into swap before any JVM
-    limit applies. SPARK_DRIVER_MEMORY always wins."""
+    machine actually has headroom for it (>= 96 GiB), else 4g. In local
+    mode the driver JVM hosts all executor threads so this IS the executor
+    heap; sizing it to the 128 GiB test host unconditionally would let a
+    long suite drive a small dev box into swap before any JVM limit
+    applies. 4g is twice what the test suite needs: on a 4-core 15 GiB
+    host its live heap after a full GC was 345-410 MB at the end and at
+    most ~1.1 GB after an old-generation collection mid-run, it passed
+    alike at 8g and 4g (258 s both), and the JVM peaked at 5.4 GB RSS
+    instead of 8.2 GB, leaving room for a second Spark process beside it.
+    SPARK_DRIVER_MEMORY always wins."""
     env = os.environ.get("SPARK_DRIVER_MEMORY")
     if env:
         return env
@@ -128,10 +173,10 @@ def _default_driver_memory() -> str:
             for line in fh:
                 if line.startswith("MemTotal:"):
                     total_gib = int(line.split()[1]) / (1024 * 1024)
-                    return "24g" if total_gib >= 96 else "8g"
+                    return "24g" if total_gib >= 96 else "4g"
     except OSError:  # pragma: no cover - non-Linux fallback
         pass
-    return "8g"
+    return "4g"
 
 
 def get_spark(
@@ -143,18 +188,18 @@ def get_spark(
     """Build (or reuse) a SparkSession with engine defaults.
 
     ``master`` defaults to ``local[$SPARK_GRAFT_CPUS]`` locally; on a real
-    cluster leave it unset and submit via spark-submit/YARN/K8s.
+    cluster leave it unset and submit via spark-submit/YARN/K8s. The
+    initial shuffle partition count follows ``shuffle_partitions_for`` the
+    master the session runs, where ``local[*]`` counts the processors the
+    JVM sees; a ``spark.sql.shuffle.partitions`` in ``extra_confs`` wins.
     """
     if master is None:
         cpus = os.environ.get("SPARK_GRAFT_CPUS", "*")
         master = f"local[{cpus}]"
-    if shuffle_partitions is None:
-        shuffle_partitions = int(os.environ.get("SPARK_SHUFFLE_PARTITIONS", "32"))
 
     builder = (
         SparkSession.builder.appName(app_name)
         .master(master)
-        .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
@@ -170,4 +215,12 @@ def get_spark(
     for key, value in (extra_confs or {}).items():
         builder = builder.config(key, value)
     spark = builder.getOrCreate()
+    if "spark.sql.shuffle.partitions" not in (extra_confs or {}):
+        # a runtime SQL conf, so it can follow the session's real master
+        sc = spark.sparkContext
+        cores = sc._jvm.java.lang.Runtime.getRuntime().availableProcessors()
+        spark.conf.set(
+            "spark.sql.shuffle.partitions",
+            str(shuffle_partitions_for(sc.master, cores, shuffle_partitions)),
+        )
     return ensure_engine_confs(spark)

@@ -14,6 +14,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .. import cache
 from ..session import ensure_engine_confs
 
 
@@ -213,7 +214,7 @@ def run_replay_stream(
             )
         )
         # stage-then-promote: never read and overwrite the same dir in one job
-        staged = out.localCheckpoint(eager=True)
+        staged = cache.checkpoint("stream_state_stage", out)
         staged.write.mode("overwrite").parquet(state_dir)
 
     query = (

@@ -56,7 +56,9 @@ def fan_out(df: DataFrame, probe: DataFrame | None = None) -> DataFrame:
 
     The fixture tables are single parquet files (one split), so without
     this every narrow CPU-heavy map over them — tokenize/hash/distance
-    chains — runs on ONE of the 32 local cores. At warehouse scale input
+    chains — runs on ONE of the session's worker threads, however many
+    the host has (``defaultParallelism``: ``k`` for ``local[k]``, the
+    cluster's cores on a cluster). At warehouse scale input
     splits exceed parallelism and this is a no-op (no exchange added);
     results are unaffected in all the call sites (per-row maps and
     associative integer-sum aggregations, partition-invariant by design).
@@ -82,6 +84,14 @@ def fan_out(df: DataFrame, probe: DataFrame | None = None) -> DataFrame:
     if nparts < par:
         return df.repartition(par)
     return df
+
+
+def shuffle_partitions(spark: SparkSession) -> int:
+    """The session's initial shuffle partition count
+    (``spark.sql.shuffle.partitions``), for a site that pins an exchange
+    AQE must not coalesce. Every session carries the conf, so there is no
+    fallback; ``session.get_spark`` sizes it to the worker threads."""
+    return int(spark.conf.get("spark.sql.shuffle.partitions"))
 
 
 #: fan_out's probe-partition-count memo: id(probe) → (probe, n). See

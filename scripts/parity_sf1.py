@@ -78,8 +78,9 @@ def _verify_lttb_hier_sampled(
         lttb_hier_l2_from_picks_sql,
         lttb_hier_sampled_l1_sql,
     )
+    from hive3_replication_spark.util import shuffle_partitions
 
-    n_parts = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
+    n_parts = shuffle_partitions(spark)
     t_picks = time.perf_counter()
     keyed_picks = (
         _lttb_hier_chunked_pts(spark, probe_dir)

@@ -72,33 +72,50 @@ def test_rewritten_input_is_not_served_stale(spark, tmp_path, key):
 
 
 def _persisted_rdds(spark) -> int:
-    """Persisted RDDs, not counting localCheckpoint truncation points: the
-    plans cut their lineage with those, and Spark's ContextCleaner
-    releases them once the plan is garbage, not ``clear_caches``."""
-    rdds = spark.sparkContext._jsc.sc().getPersistentRDDs().values()
-    it = rdds.iterator()
-    n = 0
-    while it.hasNext():
-        n += not it.next().isLocallyCheckpointed()
-    return n
+    """Persisted RDDs, localCheckpoint truncation points included: the
+    plans cut their lineage with those, and ``cache.checkpoint`` holds
+    each so ``clear_caches`` releases it, not a later JVM GC."""
+    return spark.sparkContext._jsc.sc().getPersistentRDDs().size()
 
 
 def test_clear_caches_releases_every_persist(spark):
-    """The memoized keys persist relations through ``cache``;
-    ``clear_caches`` must unpersist all of them."""
+    """The memoized keys persist relations and the loop-carried ones
+    localCheckpoint theirs through ``cache``; ``clear_caches`` must
+    release all of them."""
     clear_caches()
     n0 = _persisted_rdds(spark)
     for key in (
         "llm_dedup_ngram",
         "llm_dedup_minhash",
+        "llm_dedup_clusters",
         "llm_dedup_semantic",
         "llm_serving_e2e",
         "llm_unigram_tokenizer",
+        "llm_domain_authority",
+        "ts_anomaly_mad",
+        "ts_downsample_lttb_hier",
     ):
         QUERIES[key](spark, SF_DIR).write.format("noop").mode(
             "overwrite"
         ).save()
     assert _persisted_rdds(spark) > n0
+    clear_caches()
+    assert _persisted_rdds(spark) == n0
+
+
+def test_checkpoint_site_releases_its_previous_checkpoint(spark):
+    """A site holds one checkpoint: the next one it makes releases the
+    last, whose blocks are gone (a plan over it no longer runs), and the
+    new one is built from the old before that happens."""
+    clear_caches()
+    n0 = _persisted_rdds(spark)
+    first = cache.checkpoint("probe", spark.range(10).selectExpr("id * 2 AS x"))
+    assert _persisted_rdds(spark) == n0 + 1
+    second = cache.checkpoint("probe", first.selectExpr("x + 1 AS x"))
+    assert _persisted_rdds(spark) == n0 + 1
+    assert sorted(r.x for r in second.collect()) == list(range(1, 20, 2))
+    with pytest.raises(Exception, match="CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND"):
+        first.collect()
     clear_caches()
     assert _persisted_rdds(spark) == n0
 

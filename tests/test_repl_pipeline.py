@@ -1029,3 +1029,71 @@ def test_footer_schema_equals_inferred_schema_replication_payloads(
     assert any(p.name == f"user_state_v{max_id}" for p in payloads)
     for p in payloads:
         _assert_footer_matches_inference(spark, p)
+
+
+def _count_footer_reads(monkeypatch) -> list[str]:
+    """Names of the files whose footer the cut-id read opens from now on."""
+    from hive3_replication_spark.repl import snapshot as snap
+
+    opened: list[str] = []
+    real = snap._footer_int64_max
+
+    def counting(f, column):
+        opened.append(f.name)
+        return real(f, column)
+
+    monkeypatch.setattr(snap, "_footer_int64_max", counting)
+    return opened
+
+
+def _data_files(table: Path) -> list[str]:
+    return sorted(
+        p.name for p in table.iterdir() if not p.name.startswith((".", "_"))
+    )
+
+
+def test_incremental_cut_id_opens_only_new_footers(spark, repl_env, monkeypatch):
+    """The source's events directory gains a file per tick; a tick's cut-id
+    read must open that file's footer only, not every footer again."""
+    cfg, run_dir, wm_dir, ev, cut, max_id = repl_env
+    events_dir = Path(cfg.source_root) / "events.parquet"
+    before = _data_files(events_dir)
+    opened = _count_footer_reads(monkeypatch)
+    quiet = incr.incremental_dump(spark, cfg, cut)
+    assert quiet["dump_path"] is None and quiet["dump_txid"] == cut
+    assert sorted(opened) == before
+    opened.clear()
+    delta = ev.filter(F.col("event_id") > cut)
+    delta.coalesce(1).write.mode("append").parquet(str(events_dir))
+    (new,) = set(_data_files(events_dir)) - set(before)
+    tick = incr.incremental_dump(spark, cfg, cut)
+    assert tick["dump_txid"] == max_id and tick["n_events"] == delta.count()
+    assert opened == [new]
+
+
+def test_cut_id_rereads_a_same_size_rewrite(tmp_path, monkeypatch):
+    """A file rewritten in place at the same size, with a later mtime, is
+    read again: the memoized answer must not survive the rewrite."""
+    import os
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from hive3_replication_spark.repl.snapshot import parquet_int64_max
+
+    table = tmp_path / "events.parquet"
+    table.mkdir()
+    old, other = table / "part-0.parquet", table / "part-1.parquet"
+    pq.write_table(pa.table({"event_id": pa.array([1, 2], pa.int64())}), old)
+    pq.write_table(pa.table({"event_id": pa.array([3, 4], pa.int64())}), other)
+    opened = _count_footer_reads(monkeypatch)
+    assert parquet_int64_max(table, "event_id") == 4
+    assert parquet_int64_max(table, "event_id") == 4
+    assert len(opened) == 2  # the unchanged second read opened nothing
+    st = os.stat(old)
+    pq.write_table(pa.table({"event_id": pa.array([1, 9], pa.int64())}), old)
+    assert os.stat(old).st_size == st.st_size
+    # a later write's mtime, even where the clock did not tick in between
+    os.utime(old, ns=(st.st_atime_ns, st.st_mtime_ns + 1_000_000_000))
+    assert parquet_int64_max(table, "event_id") == 9
+    assert opened[2:] == ["part-0.parquet"]
