@@ -318,8 +318,7 @@ def ngram_pair_jaccard(
     # row for free (with_size: size() of the per-doc array, fully narrow) —
     # this deletes the groupBy(doc_id) sizes aggregation AND both
     # |pairs|-sized post-scoring joins the previous formulation paid.
-    # Memo-bypassing callers (the bench pair-count probe) stage their
-    # shingles privately.
+    # Memo-bypassing callers (``volume``) stage their shingles privately.
     if memo_token is None:
         sh = cache.persist(
             f"shingles:{cache_key}", _shingles(documents, with_size=True)
@@ -396,6 +395,20 @@ def _ngram_pair_scores(
         .filter(F.col("jaccard") >= min_jaccard)
         .select("doc_a", "doc_b", "sz_a", "sz_b", "inter", "jaccard")
     )
+
+
+def volume(spark: SparkSession, sf_dir: str) -> dict[str, int]:
+    """The n-gram scorer's candidate volume for one corpus: every pair it
+    scores before the Jaccard threshold (``min_jaccard=0``, memo
+    bypassed, so the count never lands in the production memo), beside
+    the document count it grows against. Deterministic, so two scale
+    factors' counts compare without timing noise (docs/SCALE.md, "Volume
+    counters")."""
+    documents = load_table(spark, sf_dir, "documents")
+    scored = ngram_pair_jaccard(
+        documents, "ngram_volume", max_bucket=MAX_BUCKET, min_jaccard=0.0
+    )
+    return {"documents": documents.count(), "ngram_pairs_scored": scored.count()}
 
 
 def llm_dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -9,6 +9,8 @@ cells before scoring so the exact scorer touches ~n/cells vectors.
 
 from __future__ import annotations
 
+import functools
+
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -278,9 +280,9 @@ def llm_ann_index_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
 _N_PLANES = 48
 _BAND_WIDTH = 4  # bits per band → 12 bands
 _PLANE_SEED = 7
-_PLANES_CACHE: dict[int, list[list[float]]] = {}
 
 
+@functools.cache
 def _planes(dim: int) -> list[list[float]]:
     """Seeded Gaussian hyperplanes as plain constants.
 
@@ -290,14 +292,12 @@ def _planes(dim: int) -> list[list[float]]:
     across runs, partitions, and cluster sizes with zero coordination: they
     ship inside the plan as a folded literal, nothing is broadcast.
     """
-    if dim not in _PLANES_CACHE:
-        import numpy as np
+    import numpy as np
 
-        rng = np.random.default_rng(_PLANE_SEED)
-        _PLANES_CACHE[dim] = [
-            [float(v) for v in row] for row in rng.standard_normal((_N_PLANES, dim))
-        ]
-    return _PLANES_CACHE[dim]
+    rng = np.random.default_rng(_PLANE_SEED)
+    return [
+        [float(v) for v in row] for row in rng.standard_normal((_N_PLANES, dim))
+    ]
 
 
 def _band_sig(col_name: str, dim: int) -> F.Column:
@@ -496,6 +496,17 @@ def _batch_candidates(
         .select("q_id", "vec_id")
         .dropDuplicates(["q_id", "vec_id"])
     )
+
+
+def volume(spark: SparkSession, sf_dir: str) -> dict[str, int]:
+    """The batched LSH path's candidate volume for one corpus: the
+    (query, candidate) pairs ``_batch_candidates`` emits at
+    ``llm_ann_batch``'s bucket cap, beside the embedding count. The 10
+    queries are fixed, so the volume is claimed linear in the corpus
+    (docs/SCALE.md, "Volume counters")."""
+    emb = load_embeddings(spark, sf_dir)
+    cand = _batch_candidates(emb, embedding_dim(spark, sf_dir), 1000)
+    return {"embeddings": emb.count(), "ann_candidates": cand.count()}
 
 
 def llm_ann_batch(

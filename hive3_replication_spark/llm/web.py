@@ -374,6 +374,21 @@ def _domain_graph(
     return doms, cache.relation("web_edges", sf_dir, build_edges)
 
 
+def volume(spark: SparkSession, sf_dir: str) -> dict[str, int]:
+    """The web family's volume for one corpus: canonical-URL groups
+    (``llm_dedup_url``'s output rows) and the domain graph's total edge
+    mass Σw (``llm_domain_authority``'s cost driver: the edge KEY space
+    saturates at n_domains² while the mass keeps growing with the
+    corpus), beside the document count. Both are claimed linear in the
+    corpus (docs/SCALE.md, "Volume counters")."""
+    _, edges = _domain_graph(spark, sf_dir)
+    return {
+        "documents": load_table(spark, sf_dir, "documents").count(),
+        "url_groups": llm_dedup_url(spark, sf_dir).count(),
+        "domain_edge_mass": int(edges.agg(F.sum("w")).first()[0]),
+    }
+
+
 def llm_domain_authority(spark: SparkSession, sf_dir: str) -> DataFrame:
     """L37 — domain-authority iteration: PageRank-lite over the synthetic
     doc→domain link graph, TWO unrolled power iterations with

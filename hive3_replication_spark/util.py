@@ -5,6 +5,7 @@ from __future__ import annotations
 import atexit
 import shutil
 import tempfile
+import weakref
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -69,18 +70,15 @@ def fan_out(df: DataFrame, probe: DataFrame | None = None) -> DataFrame:
     a py4j plan conversion (~30-80 ms) per call, and probes are the
     catalog's memoized scan plans (one immutable object per (session,
     path, payload mtime) — a rewritten table yields a NEW object, so the
-    memo can never serve a stale count). The value holds a strong
-    reference to the probe so a collected object's id() cannot alias.
+    memo can never serve a stale count). The memo holds its probes
+    weakly, so an entry goes when its probe is collected.
     """
     probe = df if probe is None else probe
     sess = df.sparkSession
     par = sess.sparkContext.defaultParallelism
-    hit = _NPART_MEMO.get(id(probe))
-    if hit is not None:
-        nparts = hit[1]
-    else:
-        nparts = probe.rdd.getNumPartitions()
-        _NPART_MEMO[id(probe)] = (probe, nparts)
+    nparts = _NPART_MEMO.get(probe)
+    if nparts is None:
+        nparts = _NPART_MEMO[probe] = probe.rdd.getNumPartitions()
     if nparts < par:
         return df.repartition(par)
     return df
@@ -94,9 +92,11 @@ def shuffle_partitions(spark: SparkSession) -> int:
     return int(spark.conf.get("spark.sql.shuffle.partitions"))
 
 
-#: fan_out's probe-partition-count memo: id(probe) → (probe, n). See
-#: fan_out's docstring for why object identity is a safe key here.
-_NPART_MEMO: dict[int, tuple[DataFrame, int]] = {}
+#: fan_out's probe-partition-count memo: probe → split count. DataFrames
+#: hash by identity; see fan_out's docstring.
+_NPART_MEMO: weakref.WeakKeyDictionary[DataFrame, int] = (
+    weakref.WeakKeyDictionary()
+)
 
 
 #: Constant Column-expression-tree memo (optimization round 16, guide

@@ -22,9 +22,9 @@ rows with pass=null and the reason.
 Usage: python scripts/parity_sf1.py [--out PARITY_SF1.json] [--all]
                                     [--next N] [--keys k1,k2,...]
 (--all sweeps every registered key — the original full-registry mode;
---next N targets the first N not-yet-measured keys in registry sweep
-order — oldest-driver-stamp first, the VERDICT r11 ask-#3 tranche
-rotation — on top of everything already recorded in the output file;
+--next N targets the first N not-yet-measured keys in registry order
+(sorted by name) on top of everything already recorded in the output
+file;
 --keys FORCES a re-measure of the named keys — their prior records are
 dropped so the fresh result re-dates them (VERDICT r12 ask #3: re-run
 exactly the engine paths a late-session change touched) — while every
@@ -134,6 +134,22 @@ def _verify_lttb_hier_sampled(
     )
 
 
+#: The data-proportional keys swept at sf1 on top of the first 50
+#: registry keys (the default mode of ``resume_and_targets``).
+SCALE_PROBE_KEYS = (
+    "llm_dedup_ngram", "llm_dedup_minhash", "llm_cluster_kmeans",
+    "sql_recursive_hierarchy", "llm_ann_batch", "llm_dedup_semantic",
+    "llm_serving_e2e", "llm_ann_index_probe", "llm_dedup_incremental",
+    "ts_downsample_lttb", "ts_downsample_lttb_hier", "ts_acf",
+    "agg_weighted_median", "agg_quantile_sketch", "ts_stl_decompose",
+    "join_interval_overlap", "llm_rank_fusion", "ts_holt_winters",
+    "llm_line_boilerplate", "llm_eval_ndcg", "llm_dedup_url",
+    "llm_domain_authority", "ts_forecast_backtest", "ts_anomaly_mad",
+    "llm_kn_bigram_lm", "ts_cross_correlation", "llm_domain_mix_reweight",
+    "scan_zorder", "llm_unigram_tokenizer", "llm_unigram_apply",
+)
+
+
 def resume_and_targets(
     prior: dict[str, dict],
     query_keys: list[str],
@@ -143,7 +159,7 @@ def resume_and_targets(
 ) -> tuple[dict[str, dict], list[str]]:
     """Pure resume/targeting policy (unit-tested in
     tests/test_repl_pipeline.py) — given the prior output file's ``keys``
-    block, the registered sweep-order keys, and the CLI mode, return
+    block, the registered keys in registry order, and the CLI mode, return
     (records to carry forward, keys to target this run).
 
     - passes and oracle-skips carry forward (re-running a skip's engine
@@ -243,7 +259,6 @@ def main() -> None:
             )
         )
 
-    from bench import SCALE_PROBE_KEYS
     from hive3_replication_spark.llm.dedup import clear_caches
     from hive3_replication_spark.registry import build_oracles, build_queries
     from tests.conftest import assert_frames_match

@@ -1,80 +1,6 @@
-"""Driver-facing bench.py plumbing: the compact stdout line must always
-fit the verification driver's ~1900-char capture window, whatever the
-probe sections contain (ADVICE r5 + r7)."""
+"""The contention fingerprint ``perfbench/run.py`` takes from ``bench``."""
 
 from __future__ import annotations
-
-import json
-
-from bench import shrink_compact_line
-
-
-def _compact(**overrides) -> dict:
-    base = {
-        "metric": "headline_suite_wall_time",
-        "value": 41.0,
-        "unit": "sec",
-        "runs": 2,
-        "n_queries": 73,
-        "queries": {f"q{i}": 0.1 * i for i in range(10)},
-        "e2e": {"repl_bootstrap_e2e": 1.0, "repl_incremental_e2e": 1.1},
-        "scale_ratios": {f"k{i}": 1.0 for i in range(30)},
-        "pairs": {f"p{i}": 1000 + i for i in range(30)},
-        "sink_restate": {"rows": 100},
-        "e2e_x10": {"repl_bootstrap_e2e": 1.4},
-        "detail_file": "BENCH_DETAIL.json",
-        "sf": 0.1,
-    }
-    base.update(overrides)
-    return base
-
-
-def test_short_line_passes_through_unshrunk():
-    compact = _compact()
-    line = shrink_compact_line(compact, limit=100_000)
-    got = json.loads(line)
-    assert got["queries"] and got["pairs"] and got["scale_ratios"]
-
-
-def test_shrink_steps_bound_probe_sections():
-    compact = _compact(
-        scale_ratios={f"very_long_operator_key_{i}": 1.234 for i in range(200)},
-        pairs={f"pairs_counter_key_{i}": 10**9 for i in range(200)},
-    )
-    line = shrink_compact_line(compact)
-    assert len(line) <= 1900
-    got = json.loads(line)
-    assert got["metric"] == "headline_suite_wall_time"
-    assert got["value"] == 41.0
-
-
-def test_unshrinkable_e2e_falls_back_to_headline_fields():
-    # ADVICE r7: no shrink step drops e2e, so a pathological e2e dict used
-    # to escape the window after all seven steps were exhausted
-    compact = _compact(
-        e2e={f"end_to_end_flow_number_{i}": 1.0 + i for i in range(200)}
-    )
-    line = shrink_compact_line(compact)
-    assert len(line) <= 1900
-    got = json.loads(line)
-    assert got["metric"] == "headline_suite_wall_time"
-    assert got["value"] == 41.0
-    assert got["detail_file"] == "BENCH_DETAIL.json"
-    assert "e2e" not in got
-
-
-def test_shrink_total_over_partial_compact():
-    """ADVICE r8: shrink must not KeyError on a compact dict missing
-    queries/scale_ratios — each step guards its key access."""
-    from bench import shrink_compact_line
-
-    partial = {"metric": "m", "value": 1.0, "unit": "sec", "sf": 0.1,
-               "detail_file": "d.json", "big": "x" * 5000}
-    line = shrink_compact_line(partial, limit=200)
-    assert len(line) <= 200
-    import json
-
-    assert json.loads(line)["metric"] == "m"
 
 
 def test_contention_fingerprint_shapes():
@@ -93,75 +19,3 @@ def test_contention_fingerprint_shapes():
     assert fp["wall_s"] >= 0.05
     # Linux container: host tick + loadavg probes must be present
     assert "steal_pct" in fp and "busy_pct" in fp and "loadavg_1m" in fp
-
-
-def _detail(wall, cpu, pairs) -> dict:
-    return {
-        "contention": {
-            "headline_pass_1": {
-                "wall_s": wall,
-                "jvm_cpu_s": cpu,
-                "steal_pct": 0.1,
-            }
-        },
-        "scale_probe": {"pairs": pairs},
-    }
-
-
-def test_bench_compare_cpu_classification():
-    """The r10 CPU-primary classifier (VERDICT r9 ask #3): a wall-only
-    move reads as environment, a CPU move on bit-identical counters
-    reads as a compute regression to investigate, and a CPU move with
-    moved counters reads as a changed workload."""
-    import sys
-    from pathlib import Path
-
-    sys.path.insert(
-        0, str(Path(__file__).resolve().parent.parent / "scripts")
-    )
-    from bench_compare import diff_contention
-
-    base = _detail(50.0, 200.0, {"ngram_base": 1000})
-    env = diff_contention(
-        base, _detail(75.0, 205.0, {"ngram_base": 1000}), 0.2
-    )
-    assert any("environment" in ln for ln in env), env
-    compute = diff_contention(
-        base, _detail(52.0, 300.0, {"ngram_base": 1000}), 0.2
-    )
-    assert any("INVESTIGATE" in ln for ln in compute), compute
-    workload = diff_contention(
-        base, _detail(80.0, 300.0, {"ngram_base": 2000}), 0.2
-    )
-    assert any("workload changed" in ln for ln in workload), workload
-    # newly registered headline keys are a workload change too — the
-    # CPU they add must NOT read as a compute regression (round-10
-    # review finding: counters alone can't see added keys)
-    grown = _detail(60.0, 300.0, {"ngram_base": 1000})
-    grown["queries"] = {"old_key": 0.1, "new_key": 0.2}
-    based = dict(base)
-    based["queries"] = {"old_key": 0.1}
-    newkeys = diff_contention(based, grown, 0.2)
-    assert any("workload changed" in ln for ln in newkeys), newkeys
-    # a 0.0-rounded CPU baseline with a large new reading must read as a
-    # move, not 'flat' (division guard inverted the signal pre-fix)
-    zero = _detail(1.0, 0.0, {"ngram_base": 1000})
-    big = diff_contention(zero, _detail(1.1, 50.0, {"ngram_base": 1000}), 0.2)
-    assert any("INVESTIGATE" in ln for ln in big), big
-    flat = diff_contention(
-        base, _detail(51.0, 205.0, {"ngram_base": 1000}), 0.2
-    )
-    assert any("[flat]" in ln for ln in flat), flat
-    # a JVM restart mid-run leaves the cpu reading absent — must report
-    # the incomplete fingerprint rather than crash or misclassify
-    broken = dict(base)
-    broken["contention"] = {"headline_pass_1": {"wall_s": 50.0}}
-    incomplete = diff_contention(broken, base, 0.2)
-    assert any("incomplete" in ln for ln in incomplete), incomplete
-    # ... and the same when the NEW side is the incomplete one (ADVICE
-    # r10: a new-file block with jvm_cpu_s but no wall_s raised TypeError
-    # at the wall ratio instead of reporting the incomplete fingerprint)
-    broken_new = dict(base)
-    broken_new["contention"] = {"headline_pass_1": {"jvm_cpu_s": 200.0}}
-    incomplete_new = diff_contention(base, broken_new, 0.2)
-    assert any("incomplete" in ln for ln in incomplete_new), incomplete_new

@@ -4,13 +4,16 @@ rewritten in place re-derives every layout and relation built from it,
 layout's scratch dir is removed, and ``entry()`` starts no thread. Also the
 ``expr_memo`` key discipline: keys name the module constants their trees
 read, and a memoized aliased tree still resolves to fresh exprIds per plan.
+``fan_out``'s split-count memo does not keep its probes alive.
 """
 
 from __future__ import annotations
 
+import gc
 import os
 import shutil
 import threading
+import weakref
 
 import pyarrow.parquet as pq
 import pytest
@@ -145,6 +148,19 @@ def test_entry_starts_no_thread(spark):
     ]
     assert "h3r-prewarm" not in started, started
     assert not any(t.name == "h3r-prewarm" for t in threading.enumerate())
+
+
+def test_fan_out_memo_does_not_keep_its_probe(spark):
+    """``fan_out`` memoizes a probe's split count, but a probe nothing
+    else references is collected with its JVM plan."""
+    from hive3_replication_spark.util import fan_out
+
+    probe = spark.range(3)
+    fan_out(spark.range(10), probe)
+    ref = weakref.ref(probe)
+    del probe
+    gc.collect()
+    assert ref() is None
 
 
 def test_expr_memo_key_names_its_constants(spark, monkeypatch):

@@ -52,65 +52,6 @@ def test_survey_documents_every_key():
     )
 
 
-def test_sweep_window_pins_stalest_stamps():
-    """The driver stamps the FIRST ~50 registry keys each round, so the
-    front of ``_SWEEP_ORDER`` is load-bearing: it must hold exactly the
-    keys with the oldest (or missing) driver CORRECTNESS stamps, plus —
-    new this round (ADVICE r14) — any key whose output-relevant code
-    changed AFTER its latest stamp. This pins the round-15 window
-    (VERDICT r14 ask #1: the 5 r9-stamped scalars lead; the two
-    code-touched keys ride; the round-15 addition rides; 42 of the
-    50-key r10 stale block complete the 50; the 8 displaced r10 keys
-    sit immediately behind the window, leading round 16) — regenerate
-    the expectation alongside any ``_SWEEP_ORDER`` rotation."""
-    from hive3_replication_spark.registry import _SWEEP_ORDER
-
-    window = list(_SWEEP_ORDER[:50])
-    # the registry's stalest stamps: the 5 r9 scalars deferred out of
-    # the round-14 window — they must LEAD (two windows stale)
-    assert window[:5] == [
-        "fn_levenshtein", "fn_try_arith", "fn_concat", "fn_variant",
-        "fn_date_arith",
-    ]
-    # code-touched-since-stamp override (ADVICE r14): DoReMi's +1e-7
-    # stabilizer landed after its r13 stamp; the unigram trainer's z>0
-    # ANSI guard landed after its r14 stamp
-    assert window[5:7] == [
-        "llm_domain_mix_reweight", "llm_unigram_tokenizer",
-    ]
-    # the round-15 addition has no driver stamp yet — it must ride
-    assert window[7] == "llm_unigram_apply"
-    # the remaining 42 slots hold r10-stamped keys only (the 8 cheapest
-    # r10 re-verifies defer to round 16, immediately behind the window)
-    r10 = {
-        "sql_shipmode_priority", "sql_small_quantity_revenue",
-        "sql_top_supplier", "sql_returned_items", "sql_order_priority",
-        "sql_inactive_customer_balance", "sql_waiting_supplier",
-        "sql_shipping_priority", "sql_parts_supplier_count",
-        "sql_product_profit", "sql_customer_distribution",
-        "sql_nation_volume", "sql_large_volume_customer",
-        "sql_market_share", "sql_local_supplier_volume",
-        "sql_recursive_hierarchy", "llm_shard_assign", "udf_arrow",
-        "ts_rollup_hypertable", "scan_xml", "join_range",
-        "join_skew_salted", "agg_corr", "scan_binaryfile",
-        "llm_embed_quantize", "fn_crypto_roundtrip",
-        "llm_sample_temperature", "udf_grouped_agg", "llm_mix_sources",
-        "ts_holt_winters", "llm_line_boilerplate", "llm_eval_ndcg",
-        "llm_mmr_rerank", "llm_eval_calibration", "llm_rank_fusion",
-        "llm_similarity_topk", "udf_table_udtf", "ts_retention_cohort",
-        "udf_table", "llm_doc_embed_hash", "scan_schema_evolution",
-        "llm_vocab_coverage",
-    }
-    assert set(window[8:]) == r10, sorted(set(window[8:]) ^ r10)
-    assert len(window) == len(set(window)) == 50
-    # the deferred r10 keys lead the round-16 rotation
-    assert list(_SWEEP_ORDER[50:58]) == [
-        "win_first_value", "win_ntile", "set_intersect", "ts_ohlc",
-        "ts_resample", "llm_text_entropy", "llm_text_repetition",
-        "llm_text_bigrams",
-    ]
-
-
 def test_entry_smoke(spark):
     df = _entry.entry(spark)
     rows = df.collect()

@@ -616,8 +616,8 @@ def test_lttb_single_series_exchange(spark):
 
 def test_lttb_hier_distributed_rank_and_pinned_fanout(spark):
     """ts_downsample_lttb_hier: the two single-series scale traps stay
-    designed out (measured in scripts/probe_lttb_hier.py — the naive form
-    was 3.5x SLOWER than flat at 2M points):
+    designed out (docs/SCALE.md, "hierarchical LTTB on a single series
+    at 100x": the naive form was 3.5x SLOWER than flat at 2M points):
 
     - the chunk index must come from the distributed-rank pattern — the
       full-data window is partitioned by (range-partition id, series), so
