@@ -408,7 +408,10 @@ def volume(spark: SparkSession, sf_dir: str) -> dict[str, int]:
     scored = ngram_pair_jaccard(
         documents, "ngram_volume", max_bucket=MAX_BUCKET, min_jaccard=0.0
     )
-    return {"documents": documents.count(), "ngram_pairs_scored": scored.count()}
+    return {
+        "documents": documents.count(),
+        "ngram_pairs_scored": scored.count(),
+    }
 
 
 def llm_dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:

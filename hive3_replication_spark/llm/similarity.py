@@ -280,6 +280,9 @@ def llm_ann_index_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
 _N_PLANES = 48
 _BAND_WIDTH = 4  # bits per band → 12 bands
 _PLANE_SEED = 7
+#: Corpus-side LSH band buckets larger than this are dropped before
+#: pairing (the skew guard of the batched path and its oracle).
+ANN_MAX_BUCKET = 1000
 
 
 @functools.cache
@@ -501,16 +504,17 @@ def _batch_candidates(
 def volume(spark: SparkSession, sf_dir: str) -> dict[str, int]:
     """The batched LSH path's candidate volume for one corpus: the
     (query, candidate) pairs ``_batch_candidates`` emits at
-    ``llm_ann_batch``'s bucket cap, beside the embedding count. The 10
+    ``ANN_MAX_BUCKET``, beside the embedding count. The 10
     queries are fixed, so the volume is claimed linear in the corpus
     (docs/SCALE.md, "Volume counters")."""
     emb = load_embeddings(spark, sf_dir)
-    cand = _batch_candidates(emb, embedding_dim(spark, sf_dir), 1000)
+    dim = embedding_dim(spark, sf_dir)
+    cand = _batch_candidates(emb, dim, ANN_MAX_BUCKET)
     return {"embeddings": emb.count(), "ann_candidates": cand.count()}
 
 
 def llm_ann_batch(
-    spark: SparkSession, sf_dir: str, max_bucket: int = 1000
+    spark: SparkSession, sf_dir: str, max_bucket: int = ANN_MAX_BUCKET
 ) -> DataFrame:
     """L3e — BATCHED hyperplane-LSH ANN: the "query batches switch to a
     persisted-signature semi-join" path that llm_ann_lsh's docstring
@@ -1069,7 +1073,7 @@ _SRV_TOPK = 3    # served results per query
 
 
 def llm_serving_e2e(
-    spark: SparkSession, sf_dir: str, max_bucket: int = 1000
+    spark: SparkSession, sf_dir: str, max_bucket: int = ANN_MAX_BUCKET
 ) -> DataFrame:
     """L24 — the composed SERVING stack, end to end, as one operator: the
     three tiers a production retrieval service chains (prune WHICH vectors
@@ -1345,7 +1349,7 @@ def _lsh_cand_ctes() -> str:
         ),
         big AS (
             SELECT band FROM expl WHERE vec_id >= 10
-            GROUP BY band HAVING COUNT(*) > 1000
+            GROUP BY band HAVING COUNT(*) > {ANN_MAX_BUCKET}
         ),
         cand AS (
             SELECT DISTINCT q.vec_id AS q_id, c.vec_id

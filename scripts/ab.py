@@ -9,8 +9,9 @@ one per side; the side that runs first alternates from pair to pair so
 that a drift of the host's load does not favour either side. Only the
 last stdout line of a run is read. Every run is printed, then one row
 per end-to-end metric of BENCHMARK.json: median and quartiles per side,
-the pairs the change won, failed ops per side, and a verdict against the
-metric's bound. Run from the repository root; stdlib only.
+the pairs the change won, failed ops per side (a run that printed no
+result counts as one), and a verdict against the metric's bound. Run
+from the repository root; stdlib only.
 """
 
 from __future__ import annotations
@@ -118,15 +119,17 @@ def compare(trees: dict[str, Path], workload: str, seeds: list[int],
 
 def main() -> None:
     ap = argparse.ArgumentParser(description=__doc__.split("\n")[0])
-    ap.add_argument("--base", required=True, help="git revision to compare against")
+    ap.add_argument("--base", required=True, help="git revision to compare")
     ap.add_argument("--workload", nargs="+", required=True)
     ap.add_argument("--seeds", required=True, help="e.g. 121-130 or 1,2,3")
     args = ap.parse_args()
     metrics = json.loads((ROOT / "BENCHMARK.json").read_text())["end_to_end"]
     tmp = Path(tempfile.mkdtemp(prefix="ab-"))
     base = tmp / "base"
-    subprocess.run(["git", "worktree", "add", "--detach", str(base), args.base],
-                   cwd=ROOT, check=True, capture_output=True)
+    subprocess.run(
+        ["git", "worktree", "add", "--detach", str(base), args.base],
+        cwd=ROOT, check=True, capture_output=True,
+    )
     try:
         for workload in args.workload:
             compare({"base": base, "change": ROOT}, workload,

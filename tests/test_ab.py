@@ -44,7 +44,8 @@ def test_spread_wider_than_the_bound_is_unresolved():
     assert s["spread"] > 0.25
     assert s["verdict"] == "unresolved"
     # even a would-be regression reads unresolved when either side spreads
-    assert summarize(wide, [v * 2 for v in wide], 0.25)["verdict"] == "unresolved"
+    s = summarize(wide, [v * 2 for v in wide], 0.25)
+    assert s["verdict"] == "unresolved"
 
 
 def test_parse_seeds():
