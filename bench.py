@@ -11,10 +11,9 @@ import time
 
 
 def _host_ticks() -> dict:
-    """Cheap host-state snapshot (the scripts/diag_outlier.py probes the
-    round-8 VERDICT asked to fold in): /proc/stat cpu ticks — STEAL is
-    the sharpest external-contention signal on this virtualized host —
-    plus 1-minute loadavg. Empty dict on non-Linux."""
+    """Cheap host-state snapshot: /proc/stat cpu ticks — STEAL is the
+    sharpest external-contention signal on a virtualized host — plus
+    1-minute loadavg. Empty dict on non-Linux."""
     out: dict = {}
     try:
         with open("/proc/stat") as fh:
@@ -22,8 +21,8 @@ def _host_ticks() -> dict:
         # cpu user nice system idle iowait irq softirq steal ...
         # busy = user+nice+system+irq+softirq; the denominator must also
         # carry idle+iowait+steal or an I/O-heavy block under-counts
-        # elapsed ticks and inflates every percentage ~1.4x (round-9
-        # review). guest/guest_nice (fields 9-10) are already folded
+        # elapsed ticks and inflates every percentage ~1.4x.
+        # guest/guest_nice (fields 9-10) are already folded
         # into user by the kernel — adding them would double-count.
         if first and first[0] == "cpu" and len(first) > 8:
             busy = sum(int(v) for v in first[1:4]) + int(first[6]) + int(
@@ -49,8 +48,8 @@ def _jvm_cpu_ns(spark) -> tuple[int, int] | None:
     INTERNAL class that Java 17 strong encapsulation hides from py4j
     reflection, so the portable JVM call is just the pid (ProcessHandle,
     public API) and the accounting comes from the kernel. The pid is
-    RE-RESOLVED on every call (one cheap py4j round-trip per fingerprint,
-    ADVICE r9): a module-global cache silently attributed another
+    RE-RESOLVED on every call (one cheap py4j round-trip per
+    fingerprint): a module-global cache silently attributed another
     process's ticks after an in-process JVM restart or pid recycling.
     Returns (pid, cpu_ns) so the delta consumer can refuse to diff
     readings from two different JVMs; None when unavailable (Spark
@@ -76,8 +75,8 @@ def _fingerprint_begin(spark) -> dict:
 
 def _fingerprint_end(spark, begin: dict) -> dict:
     """Per-block contention fingerprint: wall, JVM-CPU/wall ratio (an
-    8-25x-inflated task CPU on identical work was the round-8 incident
-    signature), host steal/busy tick shares over the block, and end-of-
+    8-25x-inflated task CPU on identical work is the signature of a
+    contended host), host steal/busy tick shares over the block, and end-of-
     block loadavg. All deltas, so blocks are comparable across runs."""
     wall = time.perf_counter() - begin["t0"]
     out: dict = {"wall_s": round(wall, 3)}

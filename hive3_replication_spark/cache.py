@@ -17,10 +17,13 @@ build, so a value is built once per key even under concurrent callers, and
 a build may itself read the cache (the pair relation reads the shingle
 relation).
 
-A local checkpoint (``checkpoint``) takes one slot per site too: a site's
-new checkpoint releases the one it last made. Its lineage is cut, so a
-plan that reads a released checkpoint fails instead of recomputing: run a
-built plan before the same site checkpoints again or ``clear()`` runs.
+A local checkpoint (``checkpoint``) takes no slot. Its lineage is cut, so
+a plan that reads a released checkpoint fails instead of recomputing;
+building a key again must not break the plan an earlier build returned.
+A checkpoint therefore lives as long as some plan reads it, and Spark's
+ContextCleaner releases it once the JVM collects the last such plan. The
+cache records only its RDD id, so that ``clear()`` can release it at
+once; a loop may ``release`` its dead previous round itself.
 """
 
 from __future__ import annotations
@@ -32,6 +35,8 @@ from collections.abc import Callable
 from pathlib import Path
 from typing import Any, NamedTuple
 
+from pyspark import SparkContext
+
 from .util import remove_scratch
 
 
@@ -39,13 +44,14 @@ class _Entry(NamedTuple):
     key: Any
     value: Any
     dispose: Callable[[Any], None] | None
-    #: relations held in executor storage (persists and local
-    #: checkpoints) are what ``clear()`` drops
+    #: relations held in executor storage are what ``clear()`` drops
     persisted: bool
 
 
 _LOCK = threading.RLock()
 _ENTRIES: dict[Any, _Entry] = {}
+#: RDD ids of the local checkpoints ``clear()`` releases
+_CHECKPOINTS: set[int] = set()
 
 
 def table_fingerprint(path: str | Path) -> tuple | None:
@@ -152,23 +158,27 @@ def persist(site: str, df):
     return get(site, object(), df.persist, _unpersist, persisted=True)
 
 
-def _release_checkpoint(df) -> None:
+def _checkpoint_rdd(df):
     # a local checkpoint's plan is a LogicalRDD over the checkpointed RDD;
     # Dataset.unpersist would not find it in the cache manager
-    df._jdf.logicalPlan().rdd().unpersist(False)
+    return df._jdf.logicalPlan().rdd()
 
 
-def checkpoint(site: str, df):
-    """``df.localCheckpoint()`` held in ``site``'s slot. The new checkpoint
-    is materialized before the site's previous one is released, so a loop
-    may checkpoint each round's relation from the last round's."""
+def checkpoint(df):
+    """``df.localCheckpoint()``, recorded for ``clear()``. Only the RDD id
+    is kept, so the cache never holds the checkpoint alive."""
     value = df.localCheckpoint()
     with _LOCK:
-        drop(("checkpoint", site))
-        _ENTRIES[("checkpoint", site)] = _Entry(
-            None, value, _release_checkpoint, persisted=True
-        )
+        _CHECKPOINTS.add(_checkpoint_rdd(value).id())
     return value
+
+
+def release(df) -> None:
+    """Release the checkpoint ``df`` now; a plan reading it fails after."""
+    rdd = _checkpoint_rdd(df)
+    with _LOCK:
+        _CHECKPOINTS.discard(rdd.id())
+    rdd.unpersist(False)
 
 
 def peek(slot: Any) -> Any:
@@ -187,9 +197,17 @@ def drop(slot: Any) -> None:
 
 
 def clear() -> None:
-    """Drop every persisted relation and local checkpoint. Layouts and plan
-    choices stay: their keys carry the input fingerprint, so they cannot
-    go stale."""
+    """Drop every persisted relation and release every local checkpoint
+    still held. Layouts and plan choices stay: their keys carry the input
+    fingerprint, so they cannot go stale."""
     with _LOCK:
         for slot in [s for s, e in _ENTRIES.items() if e.persisted]:
             drop(slot)
+        sc = SparkContext._active_spark_context
+        if sc is not None:
+            held = sc._jsc.getPersistentRDDs()
+            for rdd_id in _CHECKPOINTS:
+                rdd = held.get(rdd_id)
+                if rdd is not None:
+                    rdd.unpersist(False)
+        _CHECKPOINTS.clear()

@@ -18,6 +18,7 @@ from pyspark.sql import functions as F
 from .. import cache
 from ..catalog import load_embeddings, load_table
 from ..util import expr_memo, fan_out, shuffle_partitions
+from .similarity import _dot, _km_assign, _km_recompute, _norm
 
 #: Drop blocking buckets larger than this before pairing (skew guard).
 MAX_BUCKET = 1000
@@ -102,8 +103,8 @@ def _shingles(
         ).otherwise(F.array().cast("array<string>"))
         return F.array_distinct(arr) if distinct else arr
 
-    # constant tree per (n, distinct) — ~100 ms of py4j construction,
-    # rebuilt by every shingle consumer (expr_memo: round-16 driver cut)
+    # constant tree per (n, distinct): ~100 ms of py4j construction,
+    # rebuilt by every shingle consumer
     sh_array = expr_memo(("shingle_arr", n, distinct), build_sh_array)
     if with_size:
         # Generate barrier (explode of a 1-element array) binds the shingle
@@ -123,13 +124,13 @@ def _shingles(
 def _corpus_shingles(documents: DataFrame, token: str) -> DataFrame:
     """THE per-corpus distinct 3-shingle relation (doc_id, sz, shingle),
     persisted in ``cache`` — shared by the ngram scorer AND the MinHash
-    signature build (optimization round 15, guide §1.2): both previously
-    tokenized + shingled the corpus independently per bench pass.
-    Sharing is exact for MinHash because per-permutation minima are
-    duplicate-insensitive — min over the per-doc DISTINCT shingle set
-    equals min over the multiset — and the ngram scorer consumed exactly
-    this with_size relation already. One narrow corpus pass per session
-    feeds both; ``clear_caches`` drops it with the other relations.
+    signature build, so the corpus is tokenized and shingled once, not
+    once per consumer. Sharing is exact for MinHash because
+    per-permutation minima are duplicate-insensitive — min over the
+    per-doc DISTINCT shingle set equals min over the multiset — and the
+    ngram scorer consumed exactly this with_size relation already. One
+    narrow corpus pass per session feeds both; ``clear_caches`` drops it
+    with the other relations.
 
     Storage note for the 100 TB deployment (same as the ngram scorer's
     long-standing note): the persist is a fixture-scale memo —
@@ -153,40 +154,18 @@ def clear_caches() -> None:
     cache.clear()
 
 
-def _pair_expand(docs: F.Column) -> F.Column:
-    """All ordered pairs (i < j ⇒ doc_a < doc_b) from a SORTED posting
-    list, expanded array-side — used by the ngram scorer, whose pair
-    counts ARE the shingle-intersection sizes (so it genuinely needs the
-    grouped postings; the band-bucket schemes pair via
-    ``_capped_bucket_pairs``'s self-join instead). Callers must cap the
-    list length BEFORE the enclosing collect_list (frequency pre-filter),
-    which is what bounds this at O(cap²) per bucket instead of
-    O(bucket²).
-
-    Callers must also drop singleton lists first: ``sequence(0, -1)``
-    counts DOWNWARD in Spark (yielding [0, -1], then invalid element_at
-    probes under ANSI mode). The ngram path guarantees this via its
-    df ≥ 2 frequency filter."""
-    return F.flatten(
-        F.transform(
-            F.sequence(F.lit(0), F.size(docs) - 2),
-            lambda i: F.transform(
-                F.sequence(i + 1, F.size(docs) - 1),
-                lambda j: F.struct(
-                    F.element_at(docs, (i + 1).cast("int")).alias("doc_a"),
-                    F.element_at(docs, (j + 1).cast("int")).alias("doc_b"),
-                ),
-            ),
-        )
-    )
-
-
 def _pair_expand_sized(docs: F.Column) -> F.Column:
-    """``_pair_expand`` over a SORTED array of (doc_id, sz) structs: all
-    ordered pairs, each carrying both per-doc shingle counts so the
-    Jaccard denominator needs no downstream join. Same caps/preconditions
-    as ``_pair_expand`` (list length bounded by the df pre-filter, ≥2
-    elements guaranteed by df ≥ 2)."""
+    """All ordered pairs (i < j ⇒ doc_a < doc_b) from a SORTED array of
+    (doc_id, sz) structs, expanded array-side, each carrying both per-doc
+    shingle counts so the Jaccard denominator needs no downstream join.
+    Used by the ngram scorer, whose pair counts ARE the shingle-
+    intersection sizes, so it needs the grouped postings; the band and
+    cell blockings pair through ``_capped_bucket_pairs`` instead.
+
+    The caller bounds the list length before the enclosing collect_list
+    (the df ≤ cap pre-filter), which keeps this at O(cap²) per shingle,
+    and drops singleton lists (df ≥ 2): ``sequence(0, -1)`` counts
+    DOWNWARD in Spark, yielding invalid element_at probes under ANSI."""
     return F.flatten(
         F.transform(
             F.sequence(F.lit(0), F.size(docs) - 2),
@@ -215,47 +194,37 @@ def _capped_bucket_pairs(
     bucketed: DataFrame,
     keys: list[str],
     max_bucket: int,
-    payload: str | None = None,
-    finish=None,
+    payload: str,
 ) -> DataFrame:
-    """Candidate pairs from bucket blocking with a hard skew cap: bucket
-    sizes are counted first (partial-aggregated — the exchange carries
-    |buckets| rows), buckets above ``max_bucket`` are dropped via a
-    broadcast anti-join (the OVERSIZED list is broadcast — by construction
-    it is tiny, unlike the keep-list), and only surviving buckets reach
-    the within-bucket self-join. Degenerate buckets (boilerplate-heavy
-    corpora produce them at 100 TB) therefore cost one counted row, never
-    O(bucket²) pairs in one task, and no aggregation buffer ever
-    materializes a bucket's full membership list.
+    """Every within-bucket pair of a blocking, under a hard skew cap: the
+    one pairing core of the band (MinHash, SimHash) and cell (embed,
+    semantic) near-dup operators. ``bucketed`` has one row per (doc_id,
+    bucket ``keys``) membership; the result has one row per (``keys``,
+    doc_a < doc_b) in a bucket of at most ``max_bucket`` members.
 
-    The pairing is a self-join of the SAME filtered relation: in the
-    sort-merge regime (large corpora) the two sides canonicalize to one
-    exchange with a ReusedExchange probe side; at fixture scale AQE
-    broadcasts one side instead, which is also fine. Per-task pair
-    fan-out is bounded by cap² per bucket either way.
+    Bucket sizes are counted first (partial-aggregated, so the exchange
+    carries |buckets| rows), buckets above the cap are dropped by a
+    broadcast anti-join of the OVERSIZED list (tiny by construction,
+    unlike the keep-list), and only the survivors reach the self-join. A
+    degenerate bucket (boilerplate-heavy corpora produce them at 100 TB)
+    costs one counted row, never O(bucket²) pairs in one task, and no
+    aggregation buffer holds a bucket's membership list.
 
-    When ``payload`` names a column of ``bucketed``, both sides' values
-    ride the pair rows as ``{payload}_a`` / ``{payload}_b`` so the caller
-    skips two post-pairing joins against the signature relation. Scale
-    trade (deliberate): the band shuffle then carries bands × |payload|
-    bytes per doc instead of re-shuffling the signature relation twice
-    plus the candidate pairs twice through join exchanges — at warehouse
-    scale the signature relation is too big to broadcast, so the fused
-    form wins whenever candidate density is non-trivial; the payload is
-    functionally dependent on doc_id, so the cross-band ``distinct`` is
-    unchanged.
+    The self-join reads the SAME filtered relation on both sides: in the
+    sort-merge regime the sides canonicalize to one exchange and a
+    ReusedExchange; at fixture scale AQE broadcasts one side instead.
 
-    ``finish`` (optimization round 15, guide §2.3 "shuffle fewer bytes"):
-    an optional callable applied to the raw pair relation BEFORE the
-    cross-band distinct — callers move their per-pair scoring + threshold
-    here so the distinct exchange carries (doc_a, doc_b, score) for the
-    SURVIVORS only, instead of every candidate pair dragging both
-    payloads (2 × 32 longs/pair for MinHash) through the exchange into an
-    array-keyed aggregate (measured: ~5.3 s of task CPU in that one
-    stage at sf0.1). Any deterministic ``finish`` whose output rows are
-    functions of (doc_a, doc_b) commutes with the distinct — payloads are
-    functionally dependent on doc_id, so cross-band duplicate rows score
-    identically and the distinct result set is unchanged."""
+    ``payload`` names the column of ``bucketed`` that carries a doc's
+    values; both sides' ride the pair rows as ``{payload}_a`` /
+    ``{payload}_b``, so the caller scores a pair without joining back to
+    the per-doc relation. Several per-doc values travel as one struct.
+
+    A doc pair sharing several buckets (bands) appears once per shared
+    bucket. The caller scores and thresholds the pairs first, then applies
+    ``.distinct()`` if its blocking has more than one bucket per doc: the
+    distinct exchange then carries the survivors' scores, not every
+    candidate's payloads, and the result is unchanged because a payload
+    is a function of its doc_id."""
     big = (
         bucketed.groupBy(*keys)
         .agg(F.count("*").alias("bsz"))
@@ -263,24 +232,18 @@ def _capped_bucket_pairs(
         .select(*keys)
     )
     kept = bucketed.join(F.broadcast(big), keys, "left_anti")
-    cols = [
-        F.col("x.doc_id").alias("doc_a"),
-        F.col("y.doc_id").alias("doc_b"),
-    ]
-    if payload is not None:
-        cols += [
-            F.col(f"x.{payload}").alias(f"{payload}_a"),
-            F.col(f"y.{payload}").alias(f"{payload}_b"),
-        ]
-    pairs = (
+    return (
         kept.alias("x")
         .join(kept.alias("y"), keys)
         .filter(F.col("x.doc_id") < F.col("y.doc_id"))
-        .select(*cols)
+        .select(
+            *keys,
+            F.col("x.doc_id").alias("doc_a"),
+            F.col("y.doc_id").alias("doc_b"),
+            F.col(f"x.{payload}").alias(f"{payload}_a"),
+            F.col(f"y.{payload}").alias(f"{payload}_b"),
+        )
     )
-    if finish is not None:
-        pairs = finish(pairs)
-    return pairs.distinct()
 
 
 def ngram_pair_jaccard(
@@ -325,7 +288,7 @@ def ngram_pair_jaccard(
         )
         return _ngram_pair_scores(sh, max_bucket, min_jaccard)
     # Memoized consumers share ONE corpus shingle relation with the
-    # MinHash signature build (optimization round 15). Memo validity =
+    # MinHash signature build. Memo validity =
     # (corpus, blocking cap, policy threshold): a hit computed under
     # different parameters must NOT be returned — min_jaccard/max_bucket
     # are part of the relation's identity.
@@ -366,7 +329,7 @@ def _ngram_pair_scores(
     # stage's work — collect_list + the O(cap²)-bounded pair expansion —
     # is OUTPUT-proportional (measured at sf0.1: 3.9 MB in → 20.5 MB of
     # expanded pairs, coalesced to 3 tasks holding 4.2 s of CPU = 1.8 s
-    # of wall on a 32-core host; guide §2.5). The count comes from the
+    # of wall on a 32-core host). The count comes from the
     # shuffle-partitions conf, which ``session.get_spark`` sizes to two
     # per worker thread (a fixed 32 ran this stage as 32 tasks on
     # perfbench's 2 threads, 0.60 s of task CPU for 500 documents) and a
@@ -511,10 +474,11 @@ def connected_components(
     stable (count, hash-sum) fingerprint of the edge set — one tiny
     aggregate per round; the round budget failing loudly is the guard
     against silently shipping a partial closure."""
-    edges = cache.checkpoint("cc_edges", pairs.select("doc_a", "doc_b"))
+    edges = cache.checkpoint(pairs.select("doc_a", "doc_b"))
     fp = None
     for rnd in range(1, max_rounds + 1):
-        edges = cache.checkpoint("cc_edges", _small_star(_large_star(edges)))
+        prev, edges = edges, cache.checkpoint(_small_star(_large_star(edges)))
+        cache.release(prev)
         row = edges.agg(
             F.count("*").alias("n"),
             # decimal(38,0) sum: exact and overflow-free under ANSI mode
@@ -563,7 +527,7 @@ def resolve_components(pairs: DataFrame) -> tuple[DataFrame, int]:
     Loop-carried relations are localCheckpointed per round so the driver
     iterates over O(1) plans (on a real cluster use reliable
     ``checkpoint()`` to survive executor loss mid-algorithm)."""
-    base = cache.checkpoint("rc_base", pairs.select("doc_a", "doc_b"))
+    base = cache.checkpoint(pairs.select("doc_a", "doc_b"))
     edges = base.select(
         F.explode(
             F.array(
@@ -572,7 +536,7 @@ def resolve_components(pairs: DataFrame) -> tuple[DataFrame, int]:
             )
         ).alias("e")
     ).select("e.src", "e.dst")
-    # Round-1 fusion (optimization round 15, guide §1.2): after the first
+    # Round-1 fusion: after the first
     # propagation round every node's label is min({node} ∪ N(node)), which
     # one partial-aggregated groupBy over the bidirectional edge relation
     # computes directly — same exchange the old `.distinct()` init paid,
@@ -580,7 +544,6 @@ def resolve_components(pairs: DataFrame) -> tuple[DataFrame, int]:
     # converges one full join+union+groupBy round (and its convergence
     # action) earlier. Labels at the fixpoint are unchanged.
     labels = cache.checkpoint(
-        "rc_labels",
         edges.groupBy("src")
         .agg(F.min("dst").alias("mn"))
         .select(
@@ -594,12 +557,12 @@ def resolve_components(pairs: DataFrame) -> tuple[DataFrame, int]:
         msgs = edges.join(labels, edges.src == labels.node).select(
             F.col("dst").alias("node"), "label"
         )
-        labels = cache.checkpoint(
-            "rc_labels",
+        prev, labels = labels, cache.checkpoint(
             msgs.union(labels.select("node", "label"))
             .groupBy("node")
             .agg(F.min("label").alias("label")),
         )
+        cache.release(prev)
         cur_sum = labels.agg(F.sum("label")).first()[0]
         if cur_sum == prev_sum:
             return labels, rnd
@@ -778,11 +741,11 @@ def minhash_signatures(documents: DataFrame, token: str) -> DataFrame:
     n_docs × 32 longs is tiny relative to the corpus even at 100 TB."""
 
     def build() -> DataFrame:
-        # Shared per-corpus shingle relation (optimization round 15): the
-        # per-permutation minima are duplicate-insensitive, so the ngram
-        # scorer's per-doc DISTINCT shingles yield the bit-identical
-        # signature while the corpus is tokenized+shingled once per
-        # session instead of once per consumer.
+        # Shared per-corpus shingle relation: the per-permutation minima
+        # are duplicate-insensitive, so the ngram scorer's per-doc
+        # DISTINCT shingles yield the bit-identical signature while the
+        # corpus is tokenized+shingled once per session instead of once
+        # per consumer.
         sh = _corpus_shingles(documents, token)
         # Base hash = first 8 hex chars of md5, mod Mersenne. md5 is a few
         # GB/s/core slower than xxhash64 but (a) the per-shingle cost is
@@ -793,19 +756,9 @@ def minhash_signatures(documents: DataFrame, token: str) -> DataFrame:
         # hash ONCE before the 32 permutation expressions reference it —
         # measured ~10% faster than the plain projection at sf0.1 and
         # keeps the agg input a single long per row.
+        base = F.conv(F.substring(F.md5("shingle"), 1, 8), 16, 10).cast("long")
         h = sh.select(
-            "doc_id",
-            expr_memo(
-                ("mh_base_hash", MINHASH_PERMS, MINHASH_BANDS),
-                lambda: F.explode(
-                    F.array(
-                        F.conv(
-                            F.substring(F.md5("shingle"), 1, 8), 16, 10
-                        ).cast("long")
-                        % _MERSENNE
-                    )
-                ).alias("h"),
-            ),
+            "doc_id", F.explode(F.array(base % _MERSENNE)).alias("h")
         )
         # constant trees (module-constant coefficients), ~110 ms per build
         perm_cols = expr_memo(
@@ -822,12 +775,9 @@ def minhash_signatures(documents: DataFrame, token: str) -> DataFrame:
             .agg(*perm_cols)
             .select(
                 "doc_id",
-                expr_memo(
-                    ("mh_sig_pack", MINHASH_PERMS, MINHASH_BANDS),
-                    lambda: F.array(
-                        *[F.col(f"mh{k}") for k in range(MINHASH_PERMS)]
-                    ).alias("sig"),
-                ),
+                F.array(
+                    *[F.col(f"mh{k}") for k in range(MINHASH_PERMS)]
+                ).alias("sig"),
             )
         )
 
@@ -895,7 +845,7 @@ def llm_dedup_minhash(
     # agg map side ran twice per invocation). localCheckpoint it — the
     # _batch_candidates idiom; n_docs × bands rows — so the sig agg and
     # the band explode run once (alternating A/B: −0.55 s at sf0.1).
-    banded = cache.checkpoint("minhash_banded", banded)
+    banded = cache.checkpoint(banded)
     # component-match count via zip_with over the packed arrays — one
     # narrow expression instead of 32 column equalities (plan width, not
     # execution, was the measured cost of the column form)
@@ -912,23 +862,17 @@ def llm_dedup_minhash(
         ),
     )
 
-    # Score + threshold INSIDE the pairing, before the cross-band distinct
-    # (the `finish` hook, guide §2.3): the distinct exchange then carries
-    # only surviving near-dup rows of 2 longs + 1 double instead of every
-    # candidate pair dragging both packed signatures. est_jaccard is a
-    # function of the pair, so the distinct result set is unchanged.
-    def score(pairs: DataFrame) -> DataFrame:
-        return (
-            pairs.withColumn(
-                "est_jaccard",
-                matches.cast("double") / F.lit(float(MINHASH_PERMS)),
-            )
-            .filter(F.col("est_jaccard") >= 0.25)
-            .select("doc_a", "doc_b", "est_jaccard")
+    # score + threshold before the cross-band distinct, so its exchange
+    # carries the survivors' (doc_a, doc_b, est_jaccard), not every
+    # candidate's two packed signatures
+    return (
+        _capped_bucket_pairs(banded, ["band", "bucket"], max_bucket, "sig")
+        .withColumn(
+            "est_jaccard", matches.cast("double") / F.lit(float(MINHASH_PERMS))
         )
-
-    return _capped_bucket_pairs(
-        banded, ["band", "bucket"], max_bucket, payload="sig", finish=score
+        .filter(F.col("est_jaccard") >= 0.25)
+        .select("doc_a", "doc_b", "est_jaccard")
+        .distinct()
     )
 
 
@@ -1017,25 +961,18 @@ def llm_dedup_simhash(
         F.col("bb.band").alias("band"),
         F.col("bb.bucket").alias("bucket"),
     )
-    # (Round-15 A/B note: a banded localCheckpoint — the MinHash fix —
-    # measured +0.19 s HERE: the simhash signature is one long and its
-    # relation is already cache-memoized, so the per-consumer recompute
-    # the barrier removes is nearly free while the materialization job
-    # is not.)
+    # No banded localCheckpoint, unlike MinHash: it measured +0.19 s here.
+    # The simhash signature is one long and its relation is already
+    # cache-memoized, so the per-consumer recompute a barrier removes is
+    # nearly free while the materialization job is not.
     ham = F.bit_count(F.col("simhash_a").bitwiseXOR(F.col("simhash_b")))
-
-    # Hamming filter inside the pairing, before the cross-band distinct
-    # (the `finish` hook — same §2.3 move as MinHash): the distinct
-    # dedups surviving (doc_a, doc_b, hamming) rows only.
-    def score(pairs: DataFrame) -> DataFrame:
-        return (
-            pairs.withColumn("hamming", ham)
-            .filter(F.col("hamming") <= 6)
-            .select("doc_a", "doc_b", "hamming")
-        )
-
-    return _capped_bucket_pairs(
-        bands, ["band", "bucket"], max_bucket, payload="simhash", finish=score
+    # Hamming filter before the cross-band distinct (as in MinHash)
+    return (
+        _capped_bucket_pairs(bands, ["band", "bucket"], max_bucket, "simhash")
+        .withColumn("hamming", ham)
+        .filter(F.col("hamming") <= 6)
+        .select("doc_a", "doc_b", "hamming")
+        .distinct()
     )
 
 
@@ -1057,51 +994,30 @@ def llm_dedup_embed(
     fold), so scores are bit-deterministic and SQL-verifiable.
     """
     emb = load_embeddings(spark, sf_dir)
-    block_sizes = emb.groupBy("label").agg(F.count("*").alias("bn"))
-    keep = block_sizes.filter(F.col("bn") <= max_block).select("label")
-    # fan_out (guide §2.5): the per-PAIR cosine folds of the within-block
-    # self-join run on the probe side's partitioning — one task over the
-    # one-split fixture scan without the spread; no-op at scale.
-    emb = fan_out(emb).join(keep, "label")
-    withn = emb.select(
-        "vec_id",
+    # fan_out: the per-PAIR cosine folds of the within-block self-join
+    # run on the probe side's partitioning, one task over the one-split
+    # fixture scan without the spread; a no-op at scale
+    vecs = fan_out(emb).select(
+        F.col("vec_id").alias("doc_id"),
         "label",
-        "embedding",
-        F.sqrt(
-            F.aggregate(
-                F.transform(
-                    F.col("embedding"), lambda x: x.cast("double") * x.cast("double")
-                ),
-                F.lit(0.0),
-                lambda a, x: a + x,
-            )
-        ).alias("norm"),
+        F.struct(
+            "embedding", _norm(F.col("embedding")).alias("norm")
+        ).alias("v"),
     )
-    a = withn.select(
-        F.col("vec_id").alias("vec_a"),
-        "label",
-        F.col("embedding").alias("ea"),
-        F.col("norm").alias("na"),
+    cosine = _dot(F.col("v_a.embedding"), F.col("v_b.embedding")) / (
+        F.col("v_a.norm") * F.col("v_b.norm")
     )
-    b = withn.select(
-        F.col("vec_id").alias("vec_b"),
-        "label",
-        F.col("embedding").alias("eb"),
-        F.col("norm").alias("nb"),
-    )
-    dot = F.aggregate(
-        F.zip_with(
-            F.col("ea"), F.col("eb"), lambda x, y: x.cast("double") * y.cast("double")
-        ),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
+    # one block per vector, so no pair repeats and no distinct is needed
     return (
-        a.join(b, "label")
-        .filter(F.col("vec_a") < F.col("vec_b"))
-        .withColumn("cosine", dot / (F.col("na") * F.col("nb")))
+        _capped_bucket_pairs(vecs, ["label"], max_block, "v")
+        .withColumn("cosine", cosine)
         .filter(F.col("cosine") >= 0.85)
-        .select("vec_a", "vec_b", "label", F.round("cosine", 6).alias("cosine_r"))
+        .select(
+            F.col("doc_a").alias("vec_a"),
+            F.col("doc_b").alias("vec_b"),
+            "label",
+            F.round("cosine", 6).alias("cosine_r"),
+        )
     )
 
 
@@ -1440,8 +1356,7 @@ def _sem_vectors(documents: DataFrame) -> DataFrame:
     )
     tok_hash = F.conv(F.substring(F.md5("tok"), 1, 8), 16, 10).cast("long")
     dims = toked.select("doc_id", (tok_hash % SEM_DIMS).alias("dim"))
-    # constant trees — ~300 ms of py4j construction per build (expr_memo:
-    # round-16 driver cut)
+    # constant trees: ~300 ms of py4j construction per build
     counts = expr_memo(
         ("sem_counts", SEM_DIMS),
         lambda: [
@@ -1492,21 +1407,18 @@ def llm_dedup_semantic(
     1e9 quantization overflow int64 only past ~9e9 docs·avg-count per
     (cell, dim); for 100 TB corpora normalize vectors first or drop the
     quantizer to 1e6 (docs/SCALE.md)."""
-    from .similarity import _km_assign, _km_recompute
-
     documents = load_table(spark, sf_dir, "documents")
     # n_docs × 64 doubles, referenced by BOTH assignment passes — one
     # materialization instead of re-deriving the vectors per pass. The
-    # checkpoint is fanned out against the SCAN's split count (guide
-    # §2.5/§2.6): AQE coalesces the vector agg to one partition at
-    # fixture scale, which made the whole 2-pass Lloyd chain (the K×dim
-    # interpreted distance transform per point) run as ~1 s of
-    # single-task stages; at warehouse scale the probe sees ≥ cores
-    # splits and no exchange is added. Assignment and the quantized
+    # checkpoint is fanned out against the SCAN's split count: AQE
+    # coalesces the vector agg to one partition at fixture scale, which
+    # made the whole 2-pass Lloyd chain (the K×dim interpreted distance
+    # transform per point) run as ~1 s of single-task stages; at
+    # warehouse scale the probe sees ≥ cores splits and no exchange is
+    # added. Assignment and the quantized
     # recompute are partition-invariant by design, so results are
     # bit-identical.
     pts = cache.checkpoint(
-        "semantic_points",
         fan_out(
             _sem_vectors(documents).select(
                 F.col("doc_id").alias("vec_id"), "x"
@@ -1529,50 +1441,19 @@ def llm_dedup_semantic(
     # 100 TB this is the corpus-sized assignment relation any SemDeDup
     # run materializes — use reliable checkpoint() there)
     mem = cache.checkpoint(
-        "semantic_members",
         a2.select(
             F.col("vec_id").alias("doc_id"), F.col("cluster").alias("cell"), "x"
         ),
     )
-    big = (
-        mem.groupBy("cell")
-        .agg(F.count("*").alias("csz"))
-        .filter(F.col("csz") > max_cell)
-        .select("cell")
+    cells = mem.select(
+        "doc_id", "cell", F.struct("x", _norm(F.col("x")).alias("norm")).alias("v")
     )
-    withn = mem.join(F.broadcast(big), "cell", "left_anti").select(
-        "doc_id",
-        "cell",
-        "x",
-        F.sqrt(
-            F.aggregate(
-                F.transform(F.col("x"), lambda v: v * v),
-                F.lit(0.0),
-                lambda acc, v: acc + v,
-            )
-        ).alias("nm"),
-    )
-    a = withn.select(
-        "cell",
-        F.col("doc_id").alias("doc_a"),
-        F.col("x").alias("xa"),
-        F.col("nm").alias("na"),
-    )
-    b = withn.select(
-        "cell",
-        F.col("doc_id").alias("doc_b"),
-        F.col("x").alias("xb"),
-        F.col("nm").alias("nb"),
-    )
-    dot = F.aggregate(
-        F.zip_with("xa", "xb", lambda p, q: p * q),
-        F.lit(0.0),
-        lambda acc, v: acc + v,
+    cosine = _dot(F.col("v_a.x"), F.col("v_b.x")) / (
+        F.col("v_a.norm") * F.col("v_b.norm")
     )
     dup = (
-        a.join(b, "cell")
-        .filter(F.col("doc_a") < F.col("doc_b"))
-        .filter(dot / (F.col("na") * F.col("nb")) >= SEM_TAU)
+        _capped_bucket_pairs(cells, ["cell"], max_cell, "v")
+        .filter(cosine >= SEM_TAU)
         .select("doc_b")
         .distinct()
         .select(F.col("doc_b").alias("doc_id"), F.lit(True).alias("hit"))

@@ -46,10 +46,10 @@ def llm_similarity_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     query = emb.filter(F.col("vec_id") == 0).select(
         F.col("embedding").alias("q_emb")
     )
-    # corpus side fanned out (guide §2.5): the interpreted dot/norm folds
-    # are the per-row cost and the fixture scan is one split — the whole
-    # scoring pass otherwise runs single-task; the query side stays on
-    # the raw scan so its vec_id filter still pushes down.
+    # corpus side fanned out: the interpreted dot/norm folds are the
+    # per-row cost and the fixture scan is one split — the whole scoring
+    # pass otherwise runs single-task; the query side stays on the raw
+    # scan so its vec_id filter still pushes down.
     scored = fan_out(emb).join(F.broadcast(query)).select(
         "vec_id",
         (
@@ -173,8 +173,8 @@ def llm_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "label",
             F.round(
-                _dot_d(F.col("centroid"), F.col("q_emb"))
-                / (_norm_d(F.col("centroid")) * _norm(F.col("q_emb"))),
+                _dot(F.col("centroid"), F.col("q_emb"))
+                / (_norm(F.col("centroid")) * _norm(F.col("q_emb"))),
                 9,
             ).alias("c_sim_r"),
         )
@@ -248,8 +248,8 @@ def llm_ann_index_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
             .select(
                 "label",
                 F.round(
-                    _dot_d(F.col("centroid"), F.col("q_emb"))
-                    / (_norm_d(F.col("centroid")) * _norm(F.col("q_emb"))),
+                    _dot(F.col("centroid"), F.col("q_emb"))
+                    / (_norm(F.col("centroid")) * _norm(F.col("q_emb"))),
                     9,
                 ).alias("c_sim_r"),
             )
@@ -328,9 +328,8 @@ def _band_sig(col_name: str, dim: int) -> F.Column:
 
     The tree is constant per (column name, dim) — planes are seeded
     literals — and costs ~70 ms of py4j construction per call, rebuilt by
-    every batched-LSH consumer, so it is ``expr_memo``-cached
-    (optimization round 16, guide §7.3); the signature takes the column
-    NAME so the memo key stays hashable.
+    every batched-LSH consumer, so it is ``expr_memo``-cached; the
+    signature takes the column NAME so the memo key stays hashable.
     """
     import json
 
@@ -472,12 +471,14 @@ def _batch_candidates(
     This IS the "persist the (vec_id, bands) relation once" production
     shape the single-query LSH docstring promises; the materialized form
     is n×12 rows of two longs."""
-    # fan_out (guide §2.5): the 48-plane fold is the dominant per-row cost
-    # and the fixture embeddings are one parquet split — without the
-    # spread the checkpoint materialization was a ~0.6 s single-task
-    # stage at sf0.1 (32 idle cores); a no-op at warehouse scale.
+    # not dedup._capped_bucket_pairs: this joins queries to a corpus capped
+    # on the corpus side only, and a self-join would pair corpus × corpus
+    #
+    # fan_out: the 48-plane fold is the dominant per-row cost and the
+    # fixture embeddings are one parquet split; without the spread the
+    # checkpoint materialization was a ~0.6 s single-task stage at sf0.1.
+    # A no-op at warehouse scale.
     banded = cache.checkpoint(
-        "batch_banded",
         fan_out(emb).select(
             "vec_id",
             F.explode(_band_sig("embedding", dim)).alias("band"),
@@ -763,23 +764,6 @@ def llm_embed_quantize(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _dot_d(a: F.Column, b: F.Column) -> F.Column:
-    """Dot where ``a`` is already double[] (centroids)."""
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: x * y.cast("double")),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-
-
-def _norm_d(a: F.Column) -> F.Column:
-    return F.sqrt(
-        F.aggregate(
-            F.transform(a, lambda x: x * x), F.lit(0.0), lambda acc, x: acc + x
-        )
-    )
-
-
 _RS_CAND = 50   # approximate-phase candidates
 _RS_TOPK = 10   # final exact top-k
 
@@ -816,9 +800,9 @@ def llm_ann_rescore(spark: SparkSession, sf_dir: str) -> DataFrame:
             .select("vec_id", "embedding", qcode.alias("qc"))
         )
 
-    # corpus side fanned out BELOW the int8-code projection (guide §2.5)
-    # so the quantization + integer-dot folds parallelize; the query side
-    # derives from the raw scan, keeping its vec_id pushdown.
+    # corpus side fanned out BELOW the int8-code projection so the
+    # quantization + integer-dot folds parallelize; the query side derives
+    # from the raw scan, keeping its vec_id pushdown.
     coded = coded_over(fan_out(emb))
     qry = coded_over(emb).filter(F.col("vec_id") == 0).select(
         F.col("qc").alias("q_qc"), F.col("embedding").alias("q_emb")
@@ -864,13 +848,13 @@ def _km_dist2(x: F.Column, c: F.Column) -> F.Column:
 
 
 def _km_assign(pts: DataFrame, cent: DataFrame) -> DataFrame:
-    """Each point to its nearest centroid — argmin computed NARROWLY
-    (optimization round 15, guide §2.4): the K×dim centroid relation is
-    collapsed to a ONE-ROW sorted array and attached by broadcast, and the
-    argmin is ``array_min`` over per-centroid (d2, cluster) structs — the
-    struct ordering (d2 first, cluster tiebreak) is exactly the
-    ``orderBy("d2", "cluster")`` of the row_number formulation this
-    replaces, so the selected (cluster, d2) per point is bit-identical.
+    """Each point to its nearest centroid — argmin computed NARROWLY: the
+    K×dim centroid relation is collapsed to a ONE-ROW sorted array and
+    attached by broadcast, and the argmin is ``array_min`` over
+    per-centroid (d2, cluster) structs — the struct ordering (d2 first,
+    cluster tiebreak) is exactly the ``orderBy("d2", "cluster")`` of the
+    row_number formulation this replaces, so the selected (cluster, d2)
+    per point is bit-identical.
 
     What this removes per Lloyd iteration: the K× row fan-out, one
     corpus-sized ``hashpartitioning(vec_id)`` exchange, and the per-point
@@ -887,17 +871,11 @@ def _km_assign(pts: DataFrame, cent: DataFrame) -> DataFrame:
     3× the per-row distance work, which more than repaid the saved
     exchange at fixture scale.
 
-    Both expression trees are constant (fixed column names, no runtime
-    data) and rebuilt per Lloyd iteration — the argmin tree alone costs
-    ~45 ms of py4j construction — so they are ``expr_memo``-cached
-    (optimization round 16, guide §7.3 driver fixed costs)."""
+    The argmin tree is constant (fixed column names, no runtime data)
+    and rebuilt per Lloyd iteration at ~45 ms of py4j construction, so it
+    is ``expr_memo``-cached."""
     cents = cent.agg(
-        expr_memo(
-            ("km_cents_agg", _KM_K, _KM_CQ),
-            lambda: F.array_sort(
-                F.collect_list(F.struct("cluster", "c"))
-            ).alias("_cents"),
-        )
+        F.array_sort(F.collect_list(F.struct("cluster", "c"))).alias("_cents")
     )
     best = expr_memo(
         ("km_best", _KM_K, _KM_CQ),
@@ -930,55 +908,39 @@ def _km_recompute(assigned: DataFrame) -> DataFrame:
     accumulate as int64 (associative — partitioning-independent, unlike a
     double fold), and the mean divides once per (cluster, position).
 
-    (Round-15 A/B note: computing the dim component sums as dim aggregate
-    columns in one groupBy — the MinHash-signature idiom — removes the
-    posexplode and one Exchange per iteration, but the 64-wide array
-    constructor then nests multiplicatively through the iterated
-    assign→recompute chain and Catalyst analysis/optimization of the
-    final plan ballooned from ~0.6 s to ~3.4 s of driver time; the
-    posexplode form keeps the per-iteration expression tree opaque to
-    the next layer and measured strictly faster end-to-end.)
+    (Not dim aggregate columns in one groupBy, the MinHash-signature
+    idiom: that removes the posexplode and one Exchange per iteration,
+    but the 64-wide array constructor then nests multiplicatively through
+    the iterated assign→recompute chain and Catalyst analysis/optimization
+    of the final plan ballooned from ~0.6 s to ~3.4 s of driver time; the
+    posexplode form keeps the per-iteration expression tree opaque to the
+    next layer and measured strictly faster end-to-end.)
 
-    Dataset-chain fusion (optimization round 16, guide §7.3): the mean
-    projection is computed INSIDE the second aggregate's collect_list
-    struct and the array regroup INSIDE the same agg expression, so the
-    chain is 3 eagerly-analyzed Datasets instead of 5 — each creation
-    costs ~7-15 ms of JVM analysis and the recompute runs per Lloyd
-    iteration. Values are unchanged: the struct sorts by (i, m) with i
-    unique per cluster, identical order to the old (i, m) collect."""
+    Dataset-chain fusion: the mean projection is computed INSIDE the
+    second aggregate's collect_list struct and the array regroup INSIDE
+    the same agg expression, so the chain is 3 eagerly-analyzed Datasets
+    instead of 5 — each creation costs ~7-15 ms of JVM analysis and the
+    recompute runs per Lloyd iteration. The struct sorts by (i, m) with i
+    unique per cluster, so the means come out in position order."""
     comps = assigned.select(
         "cluster", F.posexplode(F.col("x")).alias("i", "v")
     )
     sums = comps.groupBy("cluster", "i").agg(
-        expr_memo(
-            ("km_sq", _KM_K, _KM_CQ),
-            lambda: F.sum(
-                F.floor(F.col("v") * _KM_CQ + F.lit(0.5)).cast("bigint")
-            ).alias("sq"),
-        ),
-        expr_memo(("km_n", _KM_K, _KM_CQ), lambda: F.count("*").alias("n")),
+        F.sum(
+            F.floor(F.col("v") * _KM_CQ + F.lit(0.5)).cast("bigint")
+        ).alias("sq"),
+        F.count("*").alias("n"),
+    )
+    mean = (F.col("sq").cast("double") / F.col("n").cast("double")) / F.lit(
+        _KM_CQ
     )
     return sums.groupBy("cluster").agg(
-        expr_memo(
-            ("km_regroup", _KM_K, _KM_CQ),
-            lambda: F.transform(
-                F.array_sort(
-                    F.collect_list(
-                        F.struct(
-                            F.col("i"),
-                            (
-                                (
-                                    F.col("sq").cast("double")
-                                    / F.col("n").cast("double")
-                                )
-                                / F.lit(_KM_CQ)
-                            ).alias("m"),
-                        )
-                    )
-                ),
-                lambda p: p.getField("m"),
-            ).alias("c"),
-        )
+        F.transform(
+            F.array_sort(
+                F.collect_list(F.struct(F.col("i"), mean.alias("m")))
+            ),
+            lambda p: p.getField("m"),
+        ).alias("c")
     )
 
 
@@ -1001,7 +963,7 @@ def llm_cluster_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
     stay one lazy plan. Empty clusters drop out of the recompute
     identically in both engines."""
     emb = load_embeddings(spark, sf_dir)
-    # (Round-15 A/B note: fanning pts out to 32 partitions — with or
+    # (Not fanned out: spreading pts over 32 partitions — with or
     # without a localCheckpoint — measured +0.1/+0.4 s here: at 2000
     # fixture vectors the three ~230 ms single-task assignment stages
     # are cheaper than the added exchanges; the corpus-sized
@@ -1104,8 +1066,8 @@ def llm_serving_e2e(
     # candidate count) and Catalyst does not CSE the band-join + dedup
     # subtree — persist the (q_id, vec_id) relation (2 longs/row,
     # |candidates|-sized at any scale) so it computes once per invocation
-    # (optimization round 15, guide §2.4; cache-managed like the other
-    # keyed persists, so repeated invocations never leak cached relations)
+    # (cache-managed like the other keyed persists, so repeated
+    # invocations never leak cached relations)
     cand = cache.persist(
         "serving_cand", _batch_candidates(emb, dim, max_bucket)
     )
@@ -1125,7 +1087,7 @@ def llm_serving_e2e(
             .select("vec_id", "embedding", qcode.alias("qc"))
         )
 
-    # corpus-side int8 coding fanned out (guide §2.5 — the rescore split);
+    # corpus-side int8 coding fanned out (as in the rescore split);
     # the query side derives from the raw scan for vec_id pushdown.
     coded = coded_over(fan_out(emb))
     qside = coded_over(emb).filter(F.col("vec_id") < 10).select(

@@ -418,7 +418,6 @@ def llm_domain_authority(spark: SparkSession, sf_dir: str) -> DataFrame:
     # label-propagation idiom; the relation is domain-count rows, so the
     # eager checkpoint is control-plane cost)
     state = cache.checkpoint(
-        "pagerank_state",
         doms.join(F.broadcast(outw), doms.domain_id == outw.src_id, "left")
         .select(
             "domain_id",
@@ -458,7 +457,7 @@ def llm_domain_authority(spark: SparkSession, sf_dir: str) -> DataFrame:
             # stays lazy so the returned plan exposes the per-iteration
             # shape (edge relation ⋈ broadcast rank vector → one hash
             # agg) for the plan gate and EXPLAIN users
-            state = cache.checkpoint("pagerank_state", state)
+            state = cache.checkpoint(state)
     return state.select("host", "out_w", "pr1", "pr2")
 
 

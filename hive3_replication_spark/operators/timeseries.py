@@ -512,7 +512,7 @@ def ts_anomaly_mad(spark: SparkSession, sf_dir: str) -> DataFrame:
     # scanned twice (the MAD histogram and the output); checkpointing
     # med stops the plan re-expanding its histogram window under each of
     # dev's consumers (the L37 loop-state idiom — control-plane cost)
-    med = cache.checkpoint("mad_median", lower_median(ev, "v_q", "med_milli"))
+    med = cache.checkpoint(lower_median(ev, "v_q", "med_milli"))
     dev = ev.join(F.broadcast(med), "event_type").select(
         "event_id",
         "event_type",
@@ -1414,7 +1414,6 @@ def _lttb_hier_chunked_pts(spark: SparkSession, sf_dir: str) -> DataFrame:
     # full sort key makes cross-partition order consistent, so
     # global rn = (rows of this series in earlier partitions) + local rank
     parted = cache.checkpoint(  # feeds the offset agg AND the main pass
-        "lttb_ranges",
         base.repartitionByRange(n_parts, "event_type", "x", "event_id")
         .withColumn("pid", F.spark_partition_id()),
     )

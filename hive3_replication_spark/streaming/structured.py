@@ -214,8 +214,9 @@ def run_replay_stream(
             )
         )
         # stage-then-promote: never read and overwrite the same dir in one job
-        staged = cache.checkpoint("stream_state_stage", out)
+        staged = cache.checkpoint(out)
         staged.write.mode("overwrite").parquet(state_dir)
+        cache.release(staged)
 
     query = (
         stream.writeStream.foreachBatch(apply_batch)

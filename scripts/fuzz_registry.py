@@ -286,6 +286,9 @@ def gen(seed: int, out: str) -> None:
         ("purchase", 123456789.012, '{"k": 6}'),
         ("error", 0.0004, '{"k": 7}'),
     ]
+    # the hostile frames take the generated frame's dtypes, so an all-NULL
+    # column (the lone row's value) concatenates as float64, not object
+    ev_dtypes = ev.dtypes.to_dict()
     ev = pd.concat(
         [
             ev,
@@ -301,7 +304,7 @@ def gen(seed: int, out: str) -> None:
                     }
                     for i, (et, val, props) in enumerate(hostile_ev)
                 ]
-            ),
+            ).astype(ev_dtypes),
             # round-13 wave: a NULL value LEADING its partition — earliest
             # ts in the whole table, so the 'error' partition's first row
             # (by ts, event_id) carries value NULL and every trailing-frame
@@ -319,12 +322,10 @@ def gen(seed: int, out: str) -> None:
                         "props": '{"k": 0}',
                     }
                 ]
-            ),
+            ).astype(ev_dtypes),
         ],
         ignore_index=True,
     )
-    ev["event_id"] = ev.event_id.astype("int64")
-    ev["user_id"] = ev.user_id.astype("int64")
     write("events", ev)
     vocab = [f"w{i}" for i in range(40)] + ["the", "and", "of", "data", "x"]
     n_d = 300

@@ -1,13 +1,12 @@
 #!/usr/bin/env bash
-# Full-registry oracle parity at sf0.1 — 10x the external driver's
-# verification volume (VERDICT r7 ask #6: the round-7 manual run as a
-# one-command gate). Runs every queries()/oracle_sql() pair on a plain
-# SparkSession (the driver's exact environment) against
-# /root/testdata/sf0.1 and fails unless the expected pass count lands.
+# Full-registry oracle parity at sf0.1, 10x the sf0.01 driver check's
+# volume, as one command. Runs every queries()/oracle_sql() pair on a
+# plain SparkSession (the driver's exact environment) against
+# /root/testdata/sf0.1 and fails unless every collected test passes: a
+# failure, an error or a skip all fail the gate, and there is no expected
+# count to keep in step with the registry.
 #
-# Usage: scripts/parity_sf01.sh [expected_pass_count]
-#   default expectation: 259 (253 registry keys + 6 harness gates; bump
-#   it when tests are added to tests/test_oracle_parity.py).
+# Usage: scripts/parity_sf01.sh
 #
 # The class of bug this catches beyond the sf0.01 driver check:
 # decimal->double drift past 2^53, window tie-breaks that only collide
@@ -15,24 +14,20 @@
 set -euo pipefail
 cd "$(dirname "$0")/.."
 
-EXPECTED="${1:-259}"
 OUT="$(mktemp)"
 trap 'rm -f "$OUT"' EXIT
 
 # `|| true`: pytest's own exit code must not pre-empt (via pipefail) the
-# explicit failure/count checks below, which produce the useful message
+# summary check below, which produces the useful message
 H3R_PLAIN_SESSION=1 H3R_TEST_SF_DIR=/root/testdata/sf0.1 \
   python -m pytest tests/test_oracle_parity.py -q 2>&1 | tee "$OUT" | tail -3 \
   || true
 
-SUMMARY="$(grep -Eo '[0-9]+ passed' "$OUT" | tail -1 || true)"
-PASSED="${SUMMARY%% *}"
-if grep -qE '[0-9]+ (failed|error)' "$OUT"; then
-  echo "parity_sf01: FAILURES at sf0.1 — see output above" >&2
+# pytest -q ends with e.g. "261 passed, 1 warning in 999.12s"; any other
+# outcome (failed, error, skipped, xfailed, ...) shows up in that line
+SUMMARY="$(tail -1 "$OUT")"
+if ! grep -qE '^[0-9]+ passed(, [0-9]+ warnings?)? in ' <<<"$SUMMARY"; then
+  echo "parity_sf01: not every collected test passed at sf0.1: '$SUMMARY'" >&2
   exit 1
 fi
-if [[ "${PASSED:-0}" -lt "$EXPECTED" ]]; then
-  echo "parity_sf01: expected >= $EXPECTED passed, got '${SUMMARY:-none}'" >&2
-  exit 1
-fi
-echo "parity_sf01: OK ($SUMMARY at sf0.1)"
+echo "parity_sf01: OK (${SUMMARY%% in *} at sf0.1)"

@@ -106,21 +106,50 @@ def test_clear_caches_releases_every_persist(spark):
     assert _persisted_rdds(spark) == n0
 
 
-def test_checkpoint_site_releases_its_previous_checkpoint(spark):
-    """A site holds one checkpoint: the next one it makes releases the
-    last, whose blocks are gone (a plan over it no longer runs), and the
-    new one is built from the old before that happens."""
+def test_checkpoint_outlives_a_later_checkpoint(spark):
+    """A checkpoint stays readable after later checkpoints are made, even
+    ones built from it; ``release`` frees one at once, and
+    ``clear_caches`` releases the rest."""
     clear_caches()
     n0 = _persisted_rdds(spark)
-    first = cache.checkpoint("probe", spark.range(10).selectExpr("id * 2 AS x"))
-    assert _persisted_rdds(spark) == n0 + 1
-    second = cache.checkpoint("probe", first.selectExpr("x + 1 AS x"))
-    assert _persisted_rdds(spark) == n0 + 1
+    first = cache.checkpoint(spark.range(10).selectExpr("id * 2 AS x"))
+    second = cache.checkpoint(first.selectExpr("x + 1 AS x"))
+    third = cache.checkpoint(first.selectExpr("x + 2 AS x"))
+    assert _persisted_rdds(spark) == n0 + 3
+    assert sorted(r.x for r in first.collect()) == list(range(0, 20, 2))
     assert sorted(r.x for r in second.collect()) == list(range(1, 20, 2))
+    cache.release(third)
+    assert _persisted_rdds(spark) == n0 + 2
     with pytest.raises(Exception, match="CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND"):
-        first.collect()
+        third.collect()
     clear_caches()
     assert _persisted_rdds(spark) == n0
+
+
+#: keys whose builds localCheckpoint; each is built twice before either
+#: plan runs
+REBUILD_KEYS = (
+    "llm_dedup_minhash",
+    "llm_dedup_semantic",
+    "llm_dedup_clusters",
+    "llm_domain_authority",
+    "ts_anomaly_mad",
+    "ts_downsample_lttb_hier",
+    "llm_ann_batch",
+)
+
+
+@pytest.mark.parametrize("key", REBUILD_KEYS)
+def test_built_plan_survives_a_rebuild(spark, tmp_path, key):
+    """Build a key on the fixture, build it again on a copy of the
+    fixture, then run both plans: building again must not release what
+    the first plan reads, and both must give the same answer."""
+    sf = _copy_fixture(tmp_path / "sf")
+    first = QUERIES[key](spark, SF_DIR)
+    second = QUERIES[key](spark, sf)
+    rows = sorted(map(tuple, first.collect()), key=repr)
+    assert rows == sorted(map(tuple, second.collect()), key=repr)
+    clear_caches()
 
 
 def test_replaced_layout_scratch_dir_is_removed(spark, tmp_path):
@@ -179,20 +208,15 @@ def test_memoized_alias_resolves_to_fresh_expr_ids(spark):
     """One memoized ``F.count("*").alias("n")`` used in two independently
     built plans resolves to a distinct exprId in each: the Alias is
     unresolved until analysis, which mints the id per plan."""
-    from hive3_replication_spark.llm.similarity import (
-        _KM_CQ,
-        _KM_K,
-        _km_recompute,
-    )
+    from pyspark.sql import functions as F
+
     from hive3_replication_spark.util import expr_memo
 
     def missed():
-        raise AssertionError("km_n is not memoized under this key")
+        raise AssertionError("the tree is not memoized under this key")
 
-    _km_recompute(
-        spark.createDataFrame([(0, [1.0, 2.0])], "cluster int, x array<double>")
-    )
-    n = expr_memo(("km_n", _KM_K, _KM_CQ), missed)
+    expr_memo(("test_alias_n",), lambda: F.count("*").alias("n"))
+    n = expr_memo(("test_alias_n",), missed)
 
     def n_expr_id(df) -> int:
         out = df._jdf.queryExecution().analyzed().output()

@@ -5,6 +5,7 @@ ANN recall vs the exact scan, HLL++ error bounds."""
 from __future__ import annotations
 
 import pandas as pd
+import pytest
 from pyspark.sql import functions as F
 
 from hive3_replication_spark.llm.dedup import (
@@ -325,29 +326,68 @@ def test_chunk_windows_boundaries(spark, tmp_path):
             assert row.n_chunk_tokens == _CHUNK_W
 
 
-def test_embed_block_cap(spark, tmp_path):
-    """llm_dedup_embed skew guard: a label block larger than max_block is
-    dropped before pairing (400 same-label vectors, cap 100 → no pairs;
-    default cap → all close pairs scored)."""
+#: block-cap test corpus: this many identical documents (and as many
+#: near-identical same-label vectors) fill one block of every blocking
+_CAP_N = 30
+
+
+def _one_block_corpus(tmp_path) -> str:
     import numpy as np
-    import pandas as pd
 
-    from hive3_replication_spark.llm.dedup import llm_dedup_embed
-
+    text = "alpha beta gamma delta epsilon zeta eta theta iota kappa"
+    pd.DataFrame(
+        {
+            "doc_id": range(_CAP_N),
+            "text": [text] * _CAP_N,
+            "lang": ["en"] * _CAP_N,
+            "source": ["web"] * _CAP_N,
+            "n_chars": [len(text)] * _CAP_N,
+        }
+    ).to_parquet(tmp_path / "documents.parquet")
     rng = np.random.default_rng(3)
     base = rng.standard_normal(16)
     vecs = [
         (base + rng.standard_normal(16) * 0.01).astype(np.float32).tolist()
-        for _ in range(400)
+        for _ in range(_CAP_N)
     ]
-    pdf = pd.DataFrame(
-        {"vec_id": range(400), "embedding": vecs, "label": [7] * 400}
-    )
-    out = tmp_path / "embcap"
-    out.mkdir()
-    pdf.to_parquet(out / "embeddings.parquet")
-    assert llm_dedup_embed(spark, str(out), max_block=100).count() == 0
-    assert llm_dedup_embed(spark, str(out)).count() == 400 * 399 // 2
+    pd.DataFrame(
+        {"vec_id": range(_CAP_N), "embedding": vecs, "label": [7] * _CAP_N}
+    ).to_parquet(tmp_path / "embeddings.parquet")
+    return str(tmp_path)
+
+
+def _pairs_found(key: str, out) -> int:
+    """Pairs for the pair-emitting keys; pruned docs for semantic, where
+    each pruned doc has a kept lower-id duplicate in its cell."""
+    if key == "llm_dedup_semantic":
+        return out.filter("pruned").count()
+    return out.count()
+
+
+@pytest.mark.parametrize(
+    "key",
+    [
+        "llm_dedup_embed",
+        "llm_dedup_semantic",
+        "llm_dedup_minhash",
+        "llm_dedup_simhash",
+    ],
+)
+def test_block_cap_from_every_caller(spark, tmp_path, key):
+    """The skew cap every near-dup operator shares: a block one member
+    over the cap yields no pairs (semantic: no doc pruned), and a block
+    exactly at the cap is paired in full."""
+    from hive3_replication_spark.llm import dedup
+    from hive3_replication_spark.llm.dedup import clear_caches
+
+    sf = _one_block_corpus(tmp_path)
+    op = getattr(dedup, key)
+    full = _CAP_N * (_CAP_N - 1) // 2
+    if key == "llm_dedup_semantic":
+        full = _CAP_N - 1  # every doc but the lowest id
+    assert _pairs_found(key, op(spark, sf, _CAP_N - 1)) == 0
+    assert _pairs_found(key, op(spark, sf, _CAP_N)) == full
+    clear_caches()
 
 
 def test_incremental_dedup_planted_statuses(spark, tmp_path):
